@@ -309,3 +309,52 @@ def test_geom_bulk_multipoint_byte_identity():
     scalar, bulk = _bulk_vs_scalar("MultiPoint", rows_by_tile, props, ids)
     for i, (sb, bb) in enumerate(zip(scalar, bulk)):
         assert sb == bb, f"MultiPoint tile {i} diverges"
+
+
+def test_flatten_geom_arrow_matches_row_flatten():
+    """flatten_geom_arrow (Arrow offsets + values buffer) equals
+    flatten_geom_rows on the scalar-normalized rows for every bulk type,
+    on sliced arrays, with extra lines past the first for LineString /
+    MultiPoint rows (only the first is the geometry); non-conforming
+    columns return None and empty rings raise like the scalar builders."""
+    import pyarrow as pa
+
+    from vector_tile_go_spark.codec.encode_fast import (flatten_geom_arrow,
+                                                        flatten_geom_rows)
+    rng = np.random.default_rng(5)
+
+    def ring(n):
+        return rng.random((n, 2)).round(3).tolist()
+
+    l3 = pa.list_(pa.list_(pa.list_(pa.float64())))
+    l4 = pa.list_(l3)
+    rows3 = [[ring(int(rng.integers(1, 5))) for _ in range(int(k))]
+             for k in rng.integers(1, 4, 12)]
+    rows4 = [[[ring(int(rng.integers(1, 5))) for _ in range(int(r))]
+              for r in rng.integers(1, 3, int(p))]
+             for p in rng.integers(0, 3, 12)]
+    for gt, rows, typ in (("LineString", rows3, l3), ("MultiPoint", rows3, l3),
+                          ("MultiLineString", rows3, l3),
+                          ("Polygon", rows3, l3), ("MultiPolygon", rows3, l3),
+                          ("MultiPolygon", rows4, l4)):
+        arr = pa.array(rows, typ).slice(3, 7)
+        sub = rows[3:10]
+        if gt in ("LineString", "MultiPoint"):
+            norm = [c[0] for c in sub]
+        elif gt == "MultiPolygon" and typ == l3:
+            norm = [[[r] for r in c] for c in sub]
+        else:
+            norm = sub
+        got = flatten_geom_arrow(gt, arr)
+        want = flatten_geom_rows(gt, norm)
+        for g, w in zip(got, want):
+            assert g.dtype == w.dtype and np.array_equal(g, w), (gt, typ)
+    assert flatten_geom_arrow("Polygon", pa.array(rows4, l4)) is None
+    assert flatten_geom_arrow(
+        "Polygon", pa.array([[[[1.0, 2.0, 3.0]]]], l3)) is None
+    assert flatten_geom_arrow(
+        "Polygon", pa.array([[[[1.0, 2.0], None]]], l3)) is None
+    with pytest.raises(ValueError):
+        flatten_geom_arrow("Polygon", pa.array([[[[0.0, 0.0]], []]], l3))
+    with pytest.raises(ValueError):
+        flatten_geom_arrow("Polygon", pa.array([[]], l3))

@@ -205,3 +205,95 @@ def test_bulk_geom_stream_nonuniform_props_fallback(spark):
               "properties": {"other": "1"}, "id": 2}]
     want = encode_layer(feats, z, x, y, "g", extent_clamp=False)
     assert bytes(out[0]["tile_pbf"]) == want
+
+
+def _arrow_boundary_rows(geom_type, z=6, n_tiles=4, per_tile=3):
+    """Rows for every tile of one geometry type: shapes built inside each
+    tile, props maps in rotating key order (same key set)."""
+    import vector_tile_go_spark.tilemath as tm
+    rows, feats = [], {}
+    for t in range(n_tiles):
+        x, y = 10 + t, 20
+        w, s, e, n = map(float, tm.tile_bounds(z, x, y))
+
+        def p(a, b):
+            return [w + a * (e - w), s + b * (n - s)]
+
+        for i in range(per_tile):
+            d = 0.05 * i
+            ring = [p(.1 + d, .1), p(.6, .2 + d), p(.3, .8 - d)]
+            hole = [p(.3, .3 + d), p(.35, .35), p(.3 + d, .4)]
+            other = [p(.7, .7), p(.9, .75 + d), p(.8, .9)]
+            geom, coords = {
+                "LineString": ([ring], ring),
+                "MultiPoint": ([ring + [ring[1]]], ring + [ring[1]]),
+                "MultiLineString": ([ring, other], [ring, other]),
+                "Polygon": ([ring, hole], [ring, hole]),
+                "MultiPolygon3": ([ring, other], [[ring], [other]]),
+                "MultiPolygon4": ([[ring, hole], [other]],
+                                  [[ring, hole], [other]]),
+            }[geom_type]
+            keys = ["a", "b", "c"]
+            keys = keys[i % 3:] + keys[:i % 3]
+            props = {k: f"{k}{(t + i) % 2}" for k in keys}
+            fid = t * per_tile + i + 1
+            rows.append((z, x, y, fid, geom, props))
+            feats.setdefault((x, y), []).append(
+                {"type": geom_type.rstrip("34"), "coordinates": coords,
+                 "properties": props, "id": fid})
+    return rows, feats
+
+
+def test_encode_geom_tiles_arrow_boundary_byte_identity(spark):
+    """The mapInArrow encode boundary is byte-identical to encode_layer for
+    every bulk geometry type (3- and 4-level MultiPolygon included), with
+    map keys in varying order, and with null maps / null values sending
+    their tile to the scalar fallback — at 7 records per Arrow batch, so
+    tile groups straddle batch boundaries."""
+    from vector_tile_go_spark.codec.encode import encode_layer
+    from vector_tile_go_spark.sparkops.udfs import encode_geom_tiles
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        for gt in ("LineString", "MultiPoint", "MultiLineString", "Polygon",
+                   "MultiPolygon3", "MultiPolygon4"):
+            rows, feats = _arrow_boundary_rows(gt)
+            if gt == "Polygon":
+                # tile 11: a null map; tile 12: a null value
+                rows[3] = rows[3][:5] + (None,)
+                feats[(11, 20)][0]["properties"] = {}
+                rows[7] = rows[7][:5] + ({"a": None, "b": "x", "c": "y"},)
+                feats[(12, 20)][1]["properties"] = {"a": None, "b": "x",
+                                                    "c": "y"}
+            depth = "array<" * (4 if gt == "MultiPolygon4" else 3)
+            df = spark.createDataFrame(
+                rows, "z int, x long, y long, feature_id long, "
+                      f"coords {depth}double{'>' * depth.count('<')}, "
+                      "props map<string,string>")
+            # one partition: 12 sorted rows in batches of 7, so the
+            # 3-feature tile at rows 6-8 spans two batches
+            out = encode_geom_tiles(df, gt.rstrip("34"), layer_name="g",
+                                    n_partitions=1)
+            got = {(r["x"], r["y"]): r for r in out.collect()}
+            assert sorted(got) == sorted(feats), gt
+            for (x, y), fs in feats.items():
+                want = encode_layer(fs, 6, x, y, "g", extent_clamp=False)
+                assert bytes(got[(x, y)]["tile_pbf"]) == want, (gt, x)
+                assert got[(x, y)]["n_features"] == len(fs)
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_tile_stats_skips_null_tiles(spark):
+    """tile_stats skips a null tile_pbf instead of failing the stage."""
+    from vector_tile_go_spark.codec.encode import encode_layer
+    from vector_tile_go_spark.sparkops.udfs import tile_stats
+    good = encode_layer([{"type": "Point", "coordinates": [1.0, 1.0],
+                          "properties": {"k": "v"}, "id": 7}], 0, 0, 0, "t")
+    df = spark.createDataFrame(
+        [(0, 0, 0, good), (0, 1, 0, None)],
+        "z int, x bigint, y bigint, tile_pbf binary")
+    out = tile_stats(df).collect()
+    assert [(r["x"], r["layer"], r["n_features"]) for r in out] == \
+        [(0, "t", 1)]

@@ -169,3 +169,269 @@ def test_splice_append_equals_reencode_fuzz(old, new):
             for _, f in decode_tile(buf, 3, 4, 3, mode="int"))
 
     assert decoded(spliced) == decoded(reenc)
+
+
+# ---------------------------------------------------------------------------
+# columnar vertex-decode kernel vs the per-feature decode_tile walk
+# ---------------------------------------------------------------------------
+
+import math  # noqa: E402
+
+from vector_tile_go_spark import tilemath as tm  # noqa: E402
+from vector_tile_go_spark.codec.decode import (  # noqa: E402
+    GEOJSON_TYPES, bulk_decode_vertices, decode_vertex_rows,
+    decode_vertices_walk, round_half_away)
+from vector_tile_go_spark.codec.wire import encode_varint  # noqa: E402
+
+_TZ, _TX, _TY = 3, 4, 3
+_W, _S, _E, _N = map(float, tm.tile_bounds(_TZ, _TX, _TY))
+# tile fractions on a coarse percent grid: duplicates, collinear rings and
+# degenerate lines come up often
+_frac = st.tuples(st.integers(-20, 120), st.integers(-20, 120))
+
+
+def _pt(f):
+    return [_W + (_E - _W) * f[0] / 100.0, _S + (_N - _S) * f[1] / 100.0]
+
+
+def _pts(fs):
+    return [_pt(f) for f in fs]
+
+
+_geometry = st.one_of(
+    st.tuples(st.just("Point"), _frac.map(_pt)),
+    st.tuples(st.just("MultiPoint"),
+              st.lists(_frac, min_size=1, max_size=6).map(_pts)),
+    st.tuples(st.just("LineString"),
+              st.lists(_frac, min_size=2, max_size=8).map(_pts)),
+    st.tuples(st.just("MultiLineString"),
+              st.lists(st.lists(_frac, min_size=2, max_size=6).map(_pts),
+                       min_size=1, max_size=3)),
+    st.tuples(st.just("Polygon"),
+              st.lists(st.lists(_frac, min_size=3, max_size=7).map(_pts),
+                       min_size=1, max_size=3)),
+    st.tuples(st.just("MultiPolygon"),
+              st.lists(st.lists(st.lists(_frac, min_size=3, max_size=6)
+                                .map(_pts), min_size=1, max_size=2),
+                       min_size=1, max_size=3)),
+)
+_feature = st.builds(
+    lambda g, fid, k: {"type": g[0], "coordinates": g[1], "id": fid,
+                       "properties": {"k": k}},
+    _geometry, st.one_of(st.none(), st.just(0), st.integers(1, 2**63 - 1)),
+    st.sampled_from(["a", "b", "c"]))
+_layer = st.tuples(st.sampled_from(["l0", "l1", "l2"]),
+                   st.lists(_feature, min_size=0, max_size=6))
+
+
+def _encode_tile(layers):
+    return b"".join(encode_layer(feats, _TZ, _TX, _TY, name,
+                                 extent_clamp=False)
+                    for name, feats in layers)
+
+
+def _rows(cols):
+    names = cols["layer_names"]
+    return [(int(t), names[lay], int(f) if ok else None, GEOJSON_TYPES[g],
+             int(r), int(p), int(x), int(y))
+            for t, lay, f, ok, g, r, p, x, y in zip(
+                cols["tile"], cols["layer"], cols["feature_id"],
+                cols["fid_valid"], cols["geojson_type"], cols["ring_idx"],
+                cols["pt_idx"], cols["ix"], cols["iy"])]
+
+
+def _outcome(fn, bufs):
+    try:
+        return ("rows", _rows(fn(bufs)))
+    except Exception as e:  # noqa: BLE001 — compared, not swallowed
+        return ("error", type(e).__name__, str(e))
+
+
+def _field(fno, wt, payload):
+    key = encode_varint(fno << 3 | wt)
+    if wt == 0:
+        return key + encode_varint(payload)
+    return key + encode_varint(len(payload)) + payload
+
+
+def _raw_layer(name, feature_bodies):
+    body = (_field(15, 0, 2) + _field(1, 2, name.encode())
+            + b"".join(_field(2, 2, f) for f in feature_bodies)
+            + _field(3, 2, b"k") + _field(4, 2, _field(1, 2, b"v"))
+            + _field(5, 0, 4096))
+    return _field(3, 2, body)
+
+
+def _raw_feature(fid, gtype, geom: bytes, order):
+    fields = [_field(1, 0, fid), _field(2, 2, b"\x00\x00"),
+              _field(3, 0, gtype), _field(4, 2, geom)]
+    return b"".join(fields[i] for i in order)
+
+
+def _cmd(cid, count):
+    return (count << 3) | cid
+
+
+def _zz(v):
+    return (v << 1) ^ (v >> 63)
+
+
+@settings(max_examples=80, deadline=None)
+@given(st.lists(st.one_of(st.none(), st.just(b""),
+                          st.lists(_layer, min_size=1, max_size=3)
+                          .map(_encode_tile)),
+                min_size=1, max_size=5),
+       st.sampled_from([1.0, 2.0, 3.5, 16.0]))
+def test_vertex_kernel_matches_walk_on_encoder_tiles(bufs, dim):
+    """Every tile the scalar encoder emits — all six geometry types, holes,
+    id 0 / absent, multi-layer, empty and null tiles — is handled by the
+    columnar kernel and decodes to the walk's rows, row for row."""
+    cols, handled = bulk_decode_vertices(bufs)
+    assert handled.all()
+    assert _rows(cols) == _rows(decode_vertices_walk(bufs))
+    want = [int(math.copysign(math.floor(abs(v / dim) + 0.5), v))
+            for v in cols["ix"].tolist()]
+    assert round_half_away(cols["ix"], dim).tolist() == want
+
+
+def test_vertex_kernel_handles_bulk_encoder_tiles():
+    """Tiles from the vectorized encoders (points, lines, polygons with
+    holes) never leave the kernel."""
+    from vector_tile_go_spark.codec.encode_fast import (
+        encode_geom_tiles_bulk, encode_point_tiles_bulk, flatten_geom_rows)
+    rng = np.random.default_rng(3)
+    n = 40
+    x = np.repeat([4, 5], n // 2)
+    y = np.full(n, 3)
+    ids = np.arange(n, dtype=np.int64)   # id 0 = absent
+    starts, ends = np.array([0, n // 2]), np.array([n // 2, n])
+    props = {"k": np.array([str(i % 3) for i in range(n)], object)}
+    lng = _W + (_E - _W) * rng.random(n) * np.where(x == 4, 1, 2)
+    lat = _S + (_N - _S) * rng.random(n)
+    bufs = encode_point_tiles_bulk(_TZ, x, y, lng, lat, ids, props, starts,
+                                   ends, "p")
+    for gt in ("LineString", "MultiLineString", "Polygon", "MultiPolygon"):
+        rows = []
+        for i in range(n):
+            c = rng.random((3, 5, 2))
+            rings = [[[float(_W + (_E - _W) * a), float(_S + (_N - _S) * b)]
+                      for a, b in r] for r in c]
+            rows.append({"LineString": rings[0],
+                         "MultiLineString": rings,
+                         "Polygon": rings,
+                         "MultiPolygon": [rings[:2], rings[2:]]}[gt])
+        flat = flatten_geom_rows(gt, rows)
+        bufs += encode_geom_tiles_bulk(np.full(n, _TZ), x, y, ids, props,
+                                       starts, ends, "g", gt, *flat)[0]
+    cols, handled = bulk_decode_vertices(bufs)
+    assert handled.all()
+    assert _rows(cols) == _rows(decode_vertices_walk(bufs))
+
+
+@settings(max_examples=120, deadline=None)
+@given(st.lists(st.tuples(st.integers(0, 2**40), st.integers(0, 6),
+                          st.lists(st.lists(st.tuples(st.integers(-4, 4),
+                                                      st.integers(-4, 4)),
+                                            min_size=1, max_size=5),
+                                   min_size=1, max_size=4),
+                          st.permutations(range(4))),
+                min_size=1, max_size=4),
+       st.integers(1, 3))
+def test_vertex_kernel_foreign_field_order(feats, n_layers):
+    """Foreign encoders: any field order, any geom type (0 and 4-6
+    included), one MoveTo per part — so type-1 parts must merge, and small
+    deltas make zero-area and collinear rings that must stay holes."""
+    bodies = []
+    for fid, gtype, parts, order in feats:
+        ints = []
+        for pts in parts:
+            ints += [_cmd(1, 1), _zz(pts[0][0]), _zz(pts[0][1])]
+            if len(pts) > 1:
+                ints.append(_cmd(2, len(pts) - 1))
+                for px, py in pts[1:]:
+                    ints += [_zz(px), _zz(py)]
+            if gtype == 3:
+                ints.append(_cmd(7, 1))
+        geom = b"".join(encode_varint(v) for v in ints)
+        bodies.append(_raw_feature(fid, gtype, geom, order))
+    tile = b"".join(_raw_layer(f"l{i}", bodies) for i in range(n_layers))
+    cols, handled = bulk_decode_vertices([tile])
+    assert handled.all()
+    assert _rows(cols) == _rows(decode_vertices_walk([tile]))
+
+
+def _pad(v, width):
+    """Non-minimal varint of ``v`` in ``width`` bytes."""
+    out = bytearray()
+    for i in range(width):
+        b = (v >> (7 * i)) & 0x7F
+        out.append(b | (0x80 if i < width - 1 else 0))
+    return bytes(out)
+
+
+def test_vertex_kernel_wide_command_ints_fall_back():
+    """Command ints wider than 32 bits (a 10-byte varint >= 2^63 among
+    them) send the tile to the walk, which masks them to 32 bits."""
+    geom = (encode_varint(_cmd(1, 1)) + encode_varint(_zz(3))
+            + encode_varint(_zz(4)) + encode_varint((1 << 63) | _cmd(2, 1))
+            + encode_varint(_zz(5)) + encode_varint(_zz(6))
+            + _pad(_zz(7), 6) + encode_varint(2))
+    tile = _raw_layer("w", [_raw_feature(1, 2, geom, (0, 1, 2, 3))])
+    cols, handled = bulk_decode_vertices([tile, tile[:0]])
+    assert handled.tolist() == [False, True]
+    assert _rows(decode_vertex_rows([tile])) == \
+        _rows(decode_vertices_walk([tile]))
+
+
+_MUTATIONS = ("truncated_varint", "count_past_end", "unknown_command",
+              "non_minimal_varint", "multipoint_header_kept", "huge_id",
+              "truncate", "flip")
+
+
+@settings(max_examples=120, deadline=None)
+@given(st.sampled_from(_MUTATIONS), st.integers(1, 3),
+       st.lists(st.tuples(st.integers(-300, 300), st.integers(-300, 300)),
+                min_size=1, max_size=6),
+       st.integers(0, 10**6), st.integers(1, 255))
+def test_vertex_kernel_mutated_tiles_match_walk(kind, gtype, pts, pick, xor):
+    """Malformed or quirky tiles give the walk's rows or the walk's
+    exception: a truncated trailing varint, a command count past the end
+    of the stream, an unknown command, non-minimal varints, a MultiPoint
+    header whose count outlived dropped duplicates (the bulk encoder's
+    write_geometry.go:338-344 quirk), an id >= 2^63, and random
+    truncations/byte flips."""
+    if kind == "multipoint_header_kept":
+        gtype = 1
+    ints = [_cmd(1, len(pts) if gtype == 1 else 1)]
+    for i, (px, py) in enumerate(pts):
+        if gtype != 1 and i == 1:
+            ints.append(_cmd(2, len(pts) - 1))
+        ints += [_zz(px), _zz(py)]
+    if gtype == 3:
+        ints.append(_cmd(7, 1))
+    enc = [encode_varint(v) for v in ints]
+    if kind == "truncated_varint":
+        enc.append(b"\x80")
+    elif kind == "count_past_end":
+        enc[0] = encode_varint(_cmd(1, 1))
+        enc.insert(3, encode_varint(_cmd(2, 50)))
+    elif kind == "unknown_command":
+        enc.insert(pick % (len(enc) + 1), encode_varint(_cmd(3 + pick % 3,
+                                                             pick % 4)))
+    elif kind == "non_minimal_varint":
+        i = pick % len(enc)
+        enc[i] = _pad(ints[i], 2 + pick % 4)
+    elif kind == "multipoint_header_kept":
+        enc[0] = encode_varint(_cmd(1, len(pts) + 1 + pick % 3))
+    geom = b"".join(enc)
+    fid = 2**63 + pick if kind == "huge_id" else 7
+    body = _raw_feature(fid, gtype, geom, (0, 1, 2, 3))
+    tile = _raw_layer("m", [body, body])
+    if kind == "truncate":
+        tile = tile[:pick % len(tile)]
+    elif kind == "flip":
+        b = bytearray(tile)
+        b[pick % len(b)] ^= xor
+        tile = bytes(b)
+    assert (_outcome(decode_vertex_rows, [tile])
+            == _outcome(decode_vertices_walk, [tile]))

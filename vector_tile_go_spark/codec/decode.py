@@ -1043,3 +1043,340 @@ def bulk_point_tile_stats(bufs: list, distinct_prop: str,
         nv_arr[tsel[has_j]] = nv_per[has_j]
         handled[tsel[grp_ok]] = True
     return n_arr, nv_arr, handled
+
+
+# ---------------------------------------------------------------------------
+# full-geometry vertex decode: the per-feature walk (oracle) and the
+# columnar kernel, both returning the same vertex-row columns
+# ---------------------------------------------------------------------------
+
+# geojson_type codes of the vertex-row columns; "" = unknown geom type
+GEOJSON_TYPES = ("", "Point", "MultiPoint", "LineString", "MultiLineString",
+                 "Polygon", "MultiPolygon")
+_GEOJSON_CODE = {name: i for i, name in enumerate(GEOJSON_TYPES)}
+
+
+def _vertex_columns(tile_f, layer_f, fid_f, gj_f, rings_per_feat, ring_lens,
+                    ix, iy, layer_names) -> dict:
+    """Per-feature metadata + flat ring lengths/vertices -> vertex-row
+    columns: tile (index into the input list), layer (index into
+    ``layer_names``), feature_id + fid_valid (id 0 / absent = null),
+    geojson_type (index into GEOJSON_TYPES), ring_idx (ring within its
+    feature), pt_idx (vertex within its ring), ix, iy."""
+    ring_lens = np.asarray(ring_lens, np.int64)
+    rpf = np.asarray(rings_per_feat, np.int64)
+    ring_feat = np.repeat(np.arange(len(rpf)), rpf)
+    cnt = np.bincount(ring_feat, weights=ring_lens,
+                      minlength=len(rpf)).astype(np.int64)
+    ring_in_feat = np.arange(len(ring_lens)) - np.repeat(np.cumsum(rpf) - rpf,
+                                                         rpf)
+    nv = int(ring_lens.sum())
+    fid_f = np.asarray(fid_f, np.int64)
+    return {
+        "tile": np.repeat(np.asarray(tile_f, np.int64), cnt),
+        "layer": np.repeat(np.asarray(layer_f, np.int32), cnt),
+        "feature_id": np.repeat(fid_f, cnt),
+        "fid_valid": np.repeat(fid_f != 0, cnt),
+        "geojson_type": np.repeat(np.asarray(gj_f, np.int8), cnt),
+        "ring_idx": np.repeat(ring_in_feat.astype(np.int32), ring_lens),
+        "pt_idx": (np.arange(nv) - np.repeat(np.cumsum(ring_lens) - ring_lens,
+                                             ring_lens)).astype(np.int32),
+        "ix": np.asarray(ix, np.int64), "iy": np.asarray(iy, np.int64),
+        "layer_names": list(layer_names),
+    }
+
+
+def decode_vertices_walk(bufs: list) -> dict:
+    """The per-feature decode_tile walk over a list of tile bytes (None =
+    null tile, skipped) -> vertex-row columns (_vertex_columns). Features
+    without vertices emit no rows. This is the oracle the columnar kernel
+    is tested against, and its fallback for tiles it does not take."""
+    tile_f, layer_f, fid_f, gj_f, rpf, ring_lens = [], [], [], [], [], []
+    xs, ys = [], []
+    names: dict = {}
+    for t, buf in enumerate(bufs):
+        if buf is None:
+            continue
+        for lname, f in decode_tile(bytes(buf), mode="int"):
+            if not sum(f.ring_lens):
+                continue
+            tile_f.append(t)
+            layer_f.append(names.setdefault(lname, len(names)))
+            fid_f.append(f.feature_id or 0)
+            gj_f.append(_GEOJSON_CODE[f.geojson_type])
+            rpf.append(len(f.ring_lens))
+            ring_lens.extend(f.ring_lens)
+            xs.append(f.xs)
+            ys.append(f.ys)
+    ix = np.concatenate(xs).astype(np.int64) if xs else np.zeros(0, np.int64)
+    iy = np.concatenate(ys).astype(np.int64) if ys else np.zeros(0, np.int64)
+    return _vertex_columns(tile_f, layer_f, fid_f, gj_f, rpf, ring_lens,
+                           ix, iy, names)
+
+
+def _excl_cumsum(a: np.ndarray) -> np.ndarray:
+    out = np.zeros(len(a), np.int64)
+    if len(a) > 1:
+        np.cumsum(a[:-1], out=out[1:])
+    return out
+
+
+def _scan_feature_fields(buf, fs, fe, lim):
+    """Lock-step field scan over every feature body at once (the
+    bulk_scan_point_tiles idiom, one numpy pass per field ordinal): the
+    last id, geom type and geometry span of each feature, as
+    decode_feature reads them. ``ok`` is False where the walk could differ
+    or raise — a multi-byte field key, a wire type other than 0/2, a varint
+    wider than 9 bytes (ids >= 2^63 included), or any read past the tile's
+    own bytes (``lim``)."""
+    n = len(fs)
+    ok = np.ones(n, bool)
+    fid = np.zeros(n, np.int64)
+    gtype = np.zeros(n, np.int64)
+    gs = np.zeros(n, np.int64)
+    ge = np.zeros(n, np.int64)
+    pos = fs.copy()
+    act = np.flatnonzero(pos < fe)
+    top = len(buf) - 1
+    while len(act):
+        p, cap = pos[act], lim[act]
+        k = buf[np.minimum(p, top)].astype(np.int64)
+        wt, fno = k & 7, k >> 3
+        bad = (p >= cap) | (k >= 0x80) | ((wt != 0) & (wt != 2))
+        v, nb = _read_varints_at(buf, np.where(bad, 0, p + 1))
+        val_end = p + 1 + nb
+        bad |= (nb > 9) | (val_end > cap)
+        v = np.where(bad, 0, v).astype(np.int64)
+        is2 = wt == 2
+        bad |= is2 & (v > cap - val_end)
+        nxt = np.where(is2 & ~bad, val_end + v, val_end)
+        ok[act[bad]] = False
+        good = ~bad
+        a, fno, is2, v = act[good], fno[good], is2[good], v[good]
+        val_end, nxt = val_end[good], nxt[good]
+        m = ~is2 & (fno == 1)
+        fid[a[m]] = v[m]
+        m = ~is2 & (fno == 3)
+        gtype[a[m]] = v[m]
+        m = is2 & (fno == 4)
+        gs[a[m]] = val_end[m]
+        ge[a[m]] = nxt[m]
+        pos[a] = nxt
+        act = a[nxt < fe[a]]
+    return ok, fid, gtype, gs, ge
+
+
+def _walk_commands(vals, vs, ve):
+    """Lock-step command walk over every feature's command ints at once
+    (one numpy pass per command ordinal) with decode_geometry_cmds'
+    semantics: MoveTo/LineTo runs clipped to the available pairs, every
+    MoveTo opens a new part, ClosePath and unknown commands take no
+    parameters. Returns the runs sorted feature-major: (feature, first
+    parameter index, pairs, part number)."""
+    rf, rp, ra, rpart = [], [], [], []
+    part = np.zeros(len(vs), np.int64)
+    pos = vs.copy()
+    act = np.flatnonzero(pos < ve)
+    while len(act):
+        c = vals[pos[act]]
+        cid, cnt = c & 7, c >> 3
+        p1 = pos[act] + 1
+        move = cid == 1
+        part[act[move]] += 1
+        avail = np.where(move | (cid == 2),
+                         np.minimum(cnt, (ve[act] - p1) // 2), 0)
+        has = avail > 0
+        rf.append(act[has])
+        rp.append(p1[has])
+        ra.append(avail[has])
+        rpart.append(part[act[has]])
+        pos[act] = p1 + 2 * avail
+        act = act[pos[act] < ve[act]]
+    if not rf:
+        z = np.zeros(0, np.int64)
+        return z, z, z, z
+    rf = np.concatenate(rf)
+    order = np.argsort(rf, kind="stable")
+    return (rf[order], np.concatenate(rp)[order], np.concatenate(ra)[order],
+            np.concatenate(rpart)[order])
+
+
+def bulk_decode_vertices(bufs: list):
+    """Columnar vertex decode of a whole batch of tiles — the kernel twin
+    of decode_vertices_walk, with no per-feature Python:
+
+    1. parse_tile layer frames give the feature spans;
+    2. a lock-step field scan reads id, type and geometry span of every
+       feature (_scan_feature_fields);
+    3. ONE varint_decode_all pass decodes every geometry's command ints;
+    4. a lock-step command walk finds the MoveTo/LineTo runs
+       (_walk_commands);
+    5. one zigzag decode and one cumsum give the vertices, the cursor
+       reset per feature;
+    6. type-3 rings are closed with one gather and their signed areas
+       summed with one add.reduceat, to infer Polygon vs MultiPolygon
+       (read_tile.go:278-307);
+    7. type-1 parts merge into one ring, as _infer_simple_type does.
+
+    Returns (columns, handled): columns as _vertex_columns for the handled
+    tiles only; handled[i] False where the kernel cannot reproduce the walk
+    exactly (parse errors, truncated fields, an unterminated trailing
+    varint or a command int >= 2^32 in a geometry, ids >= 2^63, unknown
+    wire types) — the caller runs the walk for those tiles."""
+    m = len(bufs)
+    handled = np.zeros(m, bool)
+    tlen = np.array([0 if b is None else len(b) for b in bufs], np.int64)
+    toff = _excl_cumsum(tlen)
+    # 10 zero sentinel bytes: varint reads never index past the buffer
+    buf = np.frombuffer(b"".join(b for b in bufs if b is not None)
+                        + b"\x00" * 10, np.uint8)
+    names: dict = {}
+    spans, f_tile, f_layer = [], [], []
+    for t, b in enumerate(bufs):
+        if b is None:
+            handled[t] = True
+            continue
+        try:
+            frames = parse_tile(bytes(b))
+        except Exception:  # noqa: BLE001 — the walk re-raises it
+            continue
+        handled[t] = True
+        for lf in frames:
+            if lf.feature_spans:
+                spans.append(np.asarray(lf.feature_spans, np.int64) + toff[t])
+                f_tile.append(np.full(len(lf.feature_spans), t, np.int64))
+                f_layer.append(np.full(len(lf.feature_spans),
+                                       names.setdefault(lf.name, len(names)),
+                                       np.int64))
+    if not spans:
+        return decode_vertices_walk([]), handled
+    spans = np.concatenate(spans)
+    f_tile = np.concatenate(f_tile)
+    f_layer = np.concatenate(f_layer)
+    lim = (toff + tlen)[f_tile]
+
+    # --- 2. fields; 3. geometry varints
+    ok, fid, gtype, gs, ge = _scan_feature_fields(buf, spans[:, 0],
+                                                  spans[:, 1], lim)
+    glen = ge - gs
+    # an unterminated trailing varint decodes differently in the walk's
+    # short and long paths; it must also not merge into the next feature
+    ok &= (glen == 0) | (buf[np.maximum(ge - 1, 0)] < 0x80)
+    handled[f_tile[~ok]] = False
+    live = handled[f_tile] & (glen > 0)
+    glen = np.where(live, glen, 0)
+    total = int(glen.sum())
+    gstart = _excl_cumsum(glen)
+    raw = buf[np.repeat(gs - gstart, glen) + np.arange(total)]
+    term = raw < 0x80
+    vals = varint_decode_all(raw)
+    tcum = np.concatenate([[0], np.cumsum(term, dtype=np.int64)])
+    ve = tcum[gstart + glen]
+    vs = tcum[gstart]
+    # command ints must fit uint32 in at most 5 bytes, so the walk's
+    # 32-bit masks and casts are no-ops
+    wide = np.diff(np.concatenate([[-1], np.flatnonzero(term)])) > 5
+    big = (vals >= np.uint64(1 << 32)) | wide
+    if big.any():
+        feat_of_val = np.repeat(np.arange(len(vs)), ve - vs)
+        handled[f_tile[feat_of_val[big]]] = False
+        vals[big] = 0   # keep run counts non-negative in the walk below
+    vals = vals.astype(np.int64)
+
+    # --- 4. command runs; 5. vertices (cursor reset per feature)
+    rf, rp, ra, rpart = _walk_commands(vals, vs, ve)
+    nv = int(ra.sum())
+    run_of_v = np.repeat(np.arange(len(ra)), ra)
+    pidx = rp[run_of_v] + 2 * (np.arange(nv) - np.repeat(_excl_cumsum(ra), ra))
+    dx = vals[pidx]
+    dy = vals[pidx + 1]
+    dx = (dx >> 1) ^ -(dx & 1)
+    dy = (dy >> 1) ^ -(dy & 1)
+    fv = rf[run_of_v]
+    x = np.cumsum(dx)
+    y = np.cumsum(dy)
+    if nv:
+        fstart = np.flatnonzero(np.concatenate([[True], fv[1:] != fv[:-1]]))
+        per = np.diff(np.append(fstart, nv))
+        x -= np.repeat(x[fstart] - dx[fstart], per)
+        y -= np.repeat(y[fstart] - dy[fstart], per)
+
+    # --- rings: parts split at MoveTo; type 1 merges its parts
+    pv = np.where(gtype[fv] == 1, 0, rpart[run_of_v])
+    brk = np.ones(nv, bool)
+    brk[1:] = (fv[1:] != fv[:-1]) | (pv[1:] != pv[:-1])
+    rs = np.flatnonzero(brk)
+    rlen = np.diff(np.append(rs, nv))
+    rfeat = fv[rs]
+
+    # --- 6. close open type-3 rings (one gather), then signed areas
+    poly = gtype[rfeat] == 3
+    re_ = rs + rlen - 1
+    opened = poly & ((x[rs] != x[re_]) | (y[rs] != y[re_]))
+    if opened.any():
+        new_len = rlen + opened
+        ring_of = np.repeat(np.arange(len(rs)), new_len)
+        iw = np.arange(int(new_len.sum())) - np.repeat(_excl_cumsum(new_len),
+                                                       new_len)
+        src = rs[ring_of] + np.where(iw < rlen[ring_of], iw, 0)
+        x, y = x[src], y[src]
+        rlen = new_len
+        rs = _excl_cumsum(rlen)
+        re_ = rs + rlen - 1
+    nrings = np.bincount(rfeat, minlength=len(vs))
+    first = np.ones(len(rs), bool)
+    first[1:] = rfeat[1:] != rfeat[:-1]
+    n_neg = np.zeros(len(vs), np.int64)
+    if poly.any():
+        xf, yf = x.astype(np.float64), y.astype(np.float64)
+        xprev = np.empty_like(xf)
+        yprev = np.empty_like(yf)
+        xprev[1:], yprev[1:] = xf[:-1], yf[:-1]
+        xprev[rs], yprev[rs] = xf[re_], yf[re_]
+        area = np.add.reduceat((xprev - xf) * (yf + yprev), rs)
+        n_neg = np.bincount(rfeat[poly & ~first & (area < 0)],
+                            minlength=len(vs))
+
+    # --- 7. geojson type per feature
+    npts = np.bincount(rfeat, weights=rlen, minlength=len(vs))
+    gj = np.select(
+        [gtype == 1, gtype == 2, gtype == 3],
+        [np.where(npts == 1, _GEOJSON_CODE["Point"],
+                  _GEOJSON_CODE["MultiPoint"]),
+         np.where(nrings <= 1, _GEOJSON_CODE["LineString"],
+                  _GEOJSON_CODE["MultiLineString"]),
+         np.where(n_neg == 0, _GEOJSON_CODE["Polygon"],
+                  _GEOJSON_CODE["MultiPolygon"])], 0)
+    feats = np.flatnonzero((nrings > 0) & handled[f_tile])
+    keep_r = handled[f_tile[rfeat]]
+    keep_v = np.repeat(keep_r, rlen)
+    return _vertex_columns(f_tile[feats], f_layer[feats], fid[feats],
+                           gj[feats], nrings[feats], rlen[keep_r],
+                           x[keep_v], y[keep_v], names), handled
+
+
+def decode_vertex_rows(bufs: list) -> dict:
+    """Vertex-row columns for a batch of tiles: the columnar kernel, with
+    the per-feature walk for exactly the tiles the kernel hands back. Rows
+    come out in tile order, the same rows as decode_vertices_walk(bufs)
+    (and the same exception for a tile the walk raises on)."""
+    cols, handled = bulk_decode_vertices(bufs)
+    rest = np.flatnonzero(~handled)
+    if not len(rest):
+        return cols
+    walk = decode_vertices_walk([bufs[i] for i in rest])
+    walk["tile"] = rest[walk["tile"]]
+    walk["layer"] = walk["layer"] + len(cols["layer_names"])
+    order = np.argsort(np.concatenate([cols["tile"], walk["tile"]]),
+                       kind="stable")
+    out = {k: np.concatenate([cols[k], walk[k]])[order]
+           for k in cols if k != "layer_names"}
+    out["layer_names"] = cols["layer_names"] + walk["layer_names"]
+    return out
+
+
+def round_half_away(v, dim: float) -> np.ndarray:
+    """pbf.Round(v/dim, .5, 0) of LoadGeometryScaled
+    (read_feature_lazy.go:342-396): round half away from zero."""
+    s = np.asarray(v, np.float64) / float(dim)
+    return (np.sign(s) * np.floor(np.abs(s) + 0.5)).astype(np.int64)

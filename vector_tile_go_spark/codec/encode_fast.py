@@ -612,3 +612,95 @@ def flatten_geom_rows(geom_type: str, rows):
              else np.zeros((0, 2), np.float64))
     return (verts, np.asarray(ring_lens, np.int64),
             np.asarray(ring_feat, np.int64), np.asarray(first, bool))
+
+
+def _list_depth(t) -> int:
+    import pyarrow as pa
+    d = 0
+    while pa.types.is_list(t):
+        t = t.value_type
+        d += 1
+    return d
+
+
+def flatten_geom_arrow(geom_type: str, coords):
+    """Arrow twin of flatten_geom_rows: the same (verts, ring_lens,
+    ring_feat, ring_first_of_poly) read straight from a ``coords``
+    ListArray's offsets and its float64 values buffer — no per-feature,
+    per-ring or per-point Python objects (converting the column to pandas
+    builds one ndarray per point). ``coords`` may be a slice.
+
+    The column's nesting depth decides the shape, not a per-row probe:
+    3 levels hold one line or a ring list per feature (LineString and
+    MultiPoint take the first entry, like the scalar mapping; 3-level
+    MultiPolygon makes every ring its own polygon), 4 levels hold
+    MultiPolygon [polygon][ring][pt][xy] with holes. Returns None when the
+    column does not conform — a null at any level, a point without exactly
+    two coordinates, a non-numeric leaf, or a depth the geometry type does
+    not take; the caller then encodes through the scalar oracle. Raises
+    ValueError on the structures the scalar builders raise on (empty
+    rings, zero-ring polygons)."""
+    import pyarrow as pa
+
+    depth = _list_depth(coords.type)
+    if depth not in (3, 4) or (depth == 4 and geom_type != "MultiPolygon"):
+        return None
+    if geom_type not in ("LineString", "MultiPoint", "MultiLineString",
+                         "Polygon", "MultiPolygon"):
+        raise ValueError(f"unsupported geom_type {geom_type!r}")
+    # per-level offsets narrowed to this slice and rebased to 0; the
+    # child arrays are whole (unsliced), so null counts are conservative
+    levels = []
+    a = coords
+    lo, hi = 0, len(coords)
+    for _ in range(depth):
+        if a.null_count:
+            return None
+        o = a.offsets.to_numpy()[lo:hi + 1].astype(np.int64)
+        levels.append(o - o[0])
+        lo, hi = int(o[0]), int(o[-1])
+        a = a.values
+    if a.null_count or not (pa.types.is_floating(a.type)
+                            or pa.types.is_integer(a.type)):
+        return None
+    if not bool((np.diff(levels[-1]) == 2).all()):
+        return None
+    verts = a.to_numpy(zero_copy_only=False)[lo:hi].astype(
+        np.float64, copy=False).reshape(-1, 2)
+    nfeat = len(coords)
+    ring_lens = np.diff(levels[-2])
+    per_feat = np.diff(levels[0])     # rings (polygons for 4 levels)
+
+    if depth == 4:
+        poly_lens = np.diff(levels[1])
+        if bool((poly_lens == 0).any()):
+            raise ValueError("empty polygon in MultiPolygon")
+        ring_feat = np.repeat(np.repeat(np.arange(nfeat), per_feat),
+                              poly_lens)
+        first = np.zeros(len(ring_lens), bool)
+        first[levels[1][:-1]] = True
+    elif geom_type in ("LineString", "MultiPoint"):
+        if bool((per_feat == 0).any()):
+            raise ValueError("empty coordinates")
+        ring_feat = np.arange(nfeat)
+        first = np.ones(nfeat, bool)
+        if bool((per_feat != 1).any()):
+            # only the first line of each row is the geometry: gather it
+            take = levels[0][:-1]
+            rs = levels[-2][take]
+            ring_lens = ring_lens[take]
+            verts = verts[np.repeat(rs - np.concatenate(
+                [[0], np.cumsum(ring_lens)[:-1]]), ring_lens)
+                + np.arange(int(ring_lens.sum()))]
+    else:
+        if geom_type == "Polygon" and bool((per_feat == 0).any()):
+            raise ValueError("empty Polygon coordinates")
+        ring_feat = np.repeat(np.arange(nfeat), per_feat)
+        if geom_type == "Polygon":
+            first = np.zeros(len(ring_lens), bool)
+            first[levels[0][:-1]] = True
+        else:
+            first = np.ones(len(ring_lens), bool)
+    if bool((ring_lens == 0).any()):
+        raise ValueError("empty ring")
+    return verts, ring_lens, ring_feat, first

@@ -2,8 +2,13 @@
 
 The one unavoidable Python boundary in the engine is the MVT byte codec —
 everything before (extraction, tile assignment) and after (aggregation,
-joins) stays JVM-side. Both UDFs are Arrow-batched (grouped map /
-mapInPandas); no per-row Python anywhere.
+joins) stays JVM-side. Every UDF is Arrow-batched; no per-row Python
+anywhere. The hot paths use ``mapInArrow`` and build their output batches
+straight from numpy arrays: point and geometry encode (sorted-batch
+streaming into the bulk encoders) and full-geometry decode (the columnar
+vertex kernel). The remaining decode entry points and the scalar-oracle
+encode routes (typed props, Point shapes, geobuf) still cross as pandas
+frames (mapInPandas / applyInPandas).
 
 Scale notes (the 100 TB story):
 - encode shuffles once on (z, x, y) — the same explicit boundary the
@@ -784,10 +789,9 @@ def _stream_sorted_tile_groups(batches, emit, group_cols=("z", "x", "y")):
     """Shared sorted-batch carry protocol for pandas tile-group streams:
     concat the carried tail, find group boundaries, hand emit() ONLY the
     rows of complete groups (trimmed to the last boundary), carry the
-    final (possibly incomplete) group into the next batch. Factored out
-    of the geobuf and geometry encoders so the trim invariant — emit's
-    input is EXACTLY covered by its slices — cannot diverge between
-    copies again (round-5 review)."""
+    final (possibly incomplete) group into the next batch. The invariant
+    — emit's input is EXACTLY covered by its slices (round-5 review) — is
+    shared with its mapInArrow twin, _stream_sorted_arrow_groups."""
     pending = None
     for pdf in batches:
         if pending is not None:
@@ -826,26 +830,130 @@ def _is_4level(coords) -> bool:
     return False
 
 
+def _tile_batch(zs, xs, ys, layer_name: str, bufs, n_features):
+    """One output RecordBatch of TILE_SCHEMA, built with the declared
+    types (numpy's int64 defaults would not match ``z int``)."""
+    import pyarrow as pa
+    return pa.RecordBatch.from_arrays(
+        [pa.array(np.asarray(zs), pa.int32()),
+         pa.array(np.asarray(xs), pa.int64()),
+         pa.array(np.asarray(ys), pa.int64()),
+         pa.array([layer_name] * len(bufs), pa.string()),
+         pa.array(bufs, pa.binary()),
+         pa.array(np.asarray(n_features), pa.int32())],
+        names=["z", "x", "y", "layer", "tile_pbf", "n_features"])
+
+
+def _stream_sorted_arrow_groups(batches, emit, group_cols=("z", "x", "y")):
+    """mapInArrow twin of _stream_sorted_tile_groups: the same carry
+    protocol over RecordBatches. emit(rb, starts, ends) gets a slice that
+    its tile groups cover exactly; the last (possibly incomplete) group is
+    carried into the next batch by Arrow concatenation — nested and map
+    columns included, no conversion."""
+    import pyarrow as pa
+    pending = None
+    for rb in batches:
+        if pending is not None:
+            rb = pa.RecordBatch.from_arrays(
+                [pa.concat_arrays([p, c])
+                 for p, c in zip(pending.columns, rb.columns)],
+                schema=rb.schema)
+            pending = None
+        m = rb.num_rows
+        if not m:
+            continue
+        change = np.zeros(m - 1, dtype=bool)
+        for c in group_cols:
+            v = rb.column(c).to_numpy(zero_copy_only=False)
+            change |= v[1:] != v[:-1]
+        boundaries = np.flatnonzero(change) + 1
+        starts = np.concatenate([[0], boundaries])
+        ends = np.concatenate([boundaries, [m]])
+        if len(starts) > 1:
+            yield emit(rb.slice(0, int(ends[-2])), starts[:-1], ends[:-1])
+        pending = rb.slice(int(starts[-1]))
+    if pending is not None and pending.num_rows:
+        yield emit(pending, np.array([0]), np.array([pending.num_rows]))
+
+
+def _uniform_map_props(props):
+    """map<string,string> column -> (row_ok, keynames, values) for the
+    bulk encoder, read from the MapArray offsets/keys/items (pyarrow 16's
+    list kernels reject map<>). A row conforms when its map is non-null,
+    holds no null value, and has the key set of the first such row in any
+    order. ``values`` is a (rows, keys) object array of str whose columns
+    follow the sorted ``keynames``; only conforming rows are filled."""
+    n = len(props)
+    offs = props.offsets.to_numpy().astype(np.int64)
+    lens = np.diff(offs)
+    lo, hi = int(offs[0]), int(offs[-1])
+    row_of = np.repeat(np.arange(n), lens)
+    ok = ~props.is_null().to_numpy(zero_copy_only=False)
+    items = props.items.slice(lo, hi - lo)
+    if items.null_count:
+        ok[row_of[items.is_null().to_numpy(zero_copy_only=False)]] = False
+    if not ok.any():
+        return ok, [], np.empty((n, 0), object)
+    enc = props.keys.slice(lo, hi - lo).dictionary_encode()
+    names = np.asarray(enc.dictionary.to_pylist(), dtype=object)
+    by_name = np.argsort(names)
+    rank = np.empty(len(names), np.int64)
+    rank[by_name] = np.arange(len(names))
+    code = rank[enc.indices.to_numpy()]
+    i0 = int(np.argmax(ok))
+    k = int(lens[i0])
+    ok &= lens == k
+    rows = np.flatnonzero(ok)
+    vals = np.empty((n, k), object)
+    if not k:
+        return ok, [], vals
+    ent = np.flatnonzero(ok[row_of])
+    ent = ent[np.lexsort((code[ent], row_of[ent]))]
+    mat = code[ent].reshape(-1, k)
+    ref = mat[np.searchsorted(rows, i0)]
+    if bool((ref[1:] == ref[:-1]).any()):   # duplicate keys in one map
+        return np.zeros(n, bool), [], np.empty((n, 0), object)
+    ok[rows[~(mat == ref).all(axis=1)]] = False
+    vals[rows] = items.to_numpy(zero_copy_only=False)[ent].reshape(-1, k)
+    return ok, names[by_name][ref].tolist(), vals
+
+
+def _keep_features(flat, keep):
+    """Restrict flatten output to the features where ``keep`` is set,
+    renumbering ring_feat densely."""
+    verts, ring_lens, ring_feat, first = flat
+    rk = keep[ring_feat]
+    return (verts[np.repeat(rk, ring_lens)], ring_lens[rk],
+            (np.cumsum(keep) - 1)[ring_feat[rk]], first[rk])
+
+
 def encode_geom_tiles(features: DataFrame, geom_type: str,
                       layer_name: str = "features", extent: int = 4096,
                       extent_clamp: bool = False,
                       n_partitions: int | None = None) -> DataFrame:
-    """Bulk non-point encode (VERDICT r4 task #1): same plan shape as
-    encode_point_tiles — ONE repartition on the tile key +
-    sortWithinPartitions + a streaming mapInPandas whose kernel
-    (encode_geom_tiles_bulk) vectorizes projection/winding/delta/varint
-    across every tile in the Arrow batch. Byte-identical to the scalar
-    encode_geojson_tiles path (same encode_layer bytes, pinned by
-    tests/test_encode_fast.py); rows whose props break the bulk contract
-    (non-uniform key sets, non-string values) fall back to the scalar
-    encoder per tile group inside the UDF.
+    """Bulk non-point encode: same plan shape as encode_point_tiles — ONE
+    repartition on the tile key + sortWithinPartitions + a streaming
+    mapInArrow whose kernel (encode_geom_tiles_bulk) vectorizes
+    projection/winding/delta/varint across every tile in the Arrow batch.
+
+    The boundary is Arrow end to end: flatten_geom_arrow reads the
+    geometry from the ``coords`` ListArray offsets and values buffer, and
+    the props come from the MapArray offsets/keys/items — no pandas frame
+    and no per-feature Python when the rows conform. The column's nesting
+    depth decides 3- vs 4-level MultiPolygon. A tile group holding a null
+    map, a null prop value, a null feature_id or a key set other than the
+    batch's (compared order-insensitively), or any batch whose coords do
+    not conform, is encoded by the scalar encode_layer oracle instead.
+    Bytes are identical either way (pinned by tests/test_encode_fast.py
+    and tests/test_geom_tiles.py).
 
     This gives polygon-heavy workloads (building footprints, parcels —
     billions of rows) the same cost model as the point firehose instead of
     per-feature Python Cursor builders (reference equivalent:
     write_geometry.go:108-378, one cost model for every type)."""
     from ..codec.encode import encode_layer
-    from ..codec.encode_fast import encode_geom_tiles_bulk, flatten_geom_rows
+    from ..codec.encode_fast import (_list_depth, encode_geom_tiles_bulk,
+                                     flatten_geom_arrow)
 
     df = features.select("z", "x", "y", "feature_id", "coords", "props")
     if n_partitions is None:
@@ -853,62 +961,62 @@ def encode_geom_tiles(features: DataFrame, geom_type: str,
     df = (df.repartition(n_partitions, "z", "x", "y")
           .sortWithinPartitions("z", "x", "y", "feature_id"))
 
-    def normalize(coords):
-        # STRUCTURAL reshape only (same shape mapping as the scalar
-        # encode_group; MultiPolygon also accepts 4-level polygons with
-        # holes) — no per-vertex float() casts: both flatten_geom_rows
-        # (np.asarray per ring) and encode_layer's builders coerce
-        # element types themselves, so element-wise Python conversion
-        # here would reintroduce the O(vertices) interpreter cost the
-        # bulk kernel exists to remove
-        if geom_type in ("LineString", "MultiPoint"):
-            return coords[0]
-        if geom_type == "MultiPolygon" and not _is_4level(coords):
-            return [[ring] for ring in coords]
-        return coords
+    def scalar_tile(sub) -> bytes:
+        four_level = _list_depth(sub.column("coords").type) == 4
 
-    def scalar_tile(zs, xs, ys, fids, rows, props, s, e):
-        feats = [{"type": geom_type, "coordinates": rows[i],
-                  "properties": props[i], "id": int(fids[i])}
-                 for i in range(s, e)]
-        buf = encode_layer(feats, int(zs[s]), int(xs[s]), int(ys[s]),
-                           layer_name, extent=extent,
-                           extent_clamp=extent_clamp)
-        return (int(zs[s]), int(xs[s]), int(ys[s]), layer_name, buf, e - s)
+        def normalize(c):
+            if geom_type in ("LineString", "MultiPoint"):
+                return c[0]
+            if geom_type == "MultiPolygon" and not four_level:
+                return [[ring] for ring in c]
+            return c
 
-    def emit(pdf: pd.DataFrame, starts, ends) -> pd.DataFrame:
-        zs = pdf["z"].to_numpy()
-        xs = pdf["x"].to_numpy()
-        ys = pdf["y"].to_numpy()
-        fids = pdf["feature_id"].to_numpy()
-        rows = [normalize(c) for c in pdf["coords"]]
-        props = [dict(p) if p is not None else {} for p in pdf["props"]]
-        keys0 = sorted(props[0]) if props else []
-        uniform = all(sorted(p) == keys0 for p in props) and all(
-            isinstance(v, str) for p in props for v in p.values())
-        out = []
-        if uniform:
-            prop_cols = {k: np.array([p[k] for p in props], dtype=object)
-                         for k in keys0}
-            verts, ring_lens, ring_feat, firsts = \
-                flatten_geom_rows(geom_type, rows)
-            bufs, _ = encode_geom_tiles_bulk(
-                zs, xs, ys, fids.astype(np.int64), prop_cols,
-                starts, ends, layer_name, geom_type, verts, ring_lens,
-                ring_feat, firsts, extent=extent, clamp=extent_clamp)
-            for t, (s, e) in enumerate(zip(starts, ends)):
-                out.append((int(zs[s]), int(xs[s]), int(ys[s]), layer_name,
-                            bufs[t], int(e - s)))
-        else:
-            for s, e in zip(starts, ends):
-                out.append(scalar_tile(zs, xs, ys, fids, rows, props, s, e))
-        return pd.DataFrame(out, columns=["z", "x", "y", "layer",
-                                          "tile_pbf", "n_features"])
+        feats = [{"type": geom_type, "coordinates": normalize(c),
+                  "properties": dict(p) if p is not None else {},
+                  "id": int(f)}
+                 for f, c, p in zip(sub.column("feature_id").to_pylist(),
+                                    sub.column("coords").to_pylist(),
+                                    sub.column("props").to_pylist())]
+        z, x, y = (int(sub.column(c)[0].as_py()) for c in ("z", "x", "y"))
+        return encode_layer(feats, z, x, y, layer_name, extent=extent,
+                            extent_clamp=extent_clamp)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return _stream_sorted_tile_groups(batches, emit)
+    def emit(rb, starts, ends):
+        zs, xs, ys = (rb.column(c).to_numpy(zero_copy_only=False)
+                      for c in ("z", "x", "y"))
+        fid_col = rb.column("feature_id")
+        row_ok, keynames, vals = _uniform_map_props(rb.column("props"))
+        flat = flatten_geom_arrow(geom_type, rb.column("coords"))
+        if flat is None:
+            row_ok[:] = False
+        if fid_col.null_count:
+            row_ok &= ~fid_col.is_null().to_numpy(zero_copy_only=False)
+        lens = ends - starts
+        tile_ok = np.logical_and.reduceat(row_ok, starts)
+        bufs = [None] * len(starts)
+        if tile_ok.any():
+            keep = np.repeat(tile_ok, lens)
+            if not keep.all():
+                flat = _keep_features(flat, keep)
+            kl = lens[tile_ok]
+            ke = np.cumsum(kl)
+            out, _ = encode_geom_tiles_bulk(
+                zs[keep], xs[keep], ys[keep],
+                fid_col.to_numpy(zero_copy_only=False)[keep].astype(np.int64),
+                {k: vals[keep, j] for j, k in enumerate(keynames)},
+                ke - kl, ke, layer_name, geom_type, *flat,
+                extent=extent, clamp=extent_clamp)
+            for t, b in zip(np.flatnonzero(tile_ok).tolist(), out):
+                bufs[t] = b
+        for t in np.flatnonzero(~tile_ok).tolist():
+            bufs[t] = scalar_tile(rb.slice(int(starts[t]), int(lens[t])))
+        return _tile_batch(zs[starts], xs[starts], ys[starts], layer_name,
+                           bufs, lens)
 
-    return df.mapInPandas(run, TILE_SCHEMA)
+    def run(batches):
+        return _stream_sorted_arrow_groups(batches, emit)
+
+    return df.mapInArrow(run, TILE_SCHEMA)
 
 
 def encode_geojson_tiles(features: DataFrame, geom_type: str,
@@ -916,32 +1024,28 @@ def encode_geojson_tiles(features: DataFrame, geom_type: str,
                          extent: int = 4096,
                          extent_clamp: bool = False) -> DataFrame:
     """Generic-geometry encode: rows of (z, x, y, feature_id, coords, props)
-    -> one MVT layer per tile via the full LayerEncoder (WriteLayer,
-    write_layer.go:127-175), covering LineString/Polygon/Multi* command
-    streams, winding enforcement and ring closure — the paths the bulk
-    point encoder skips.
+    -> one MVT layer per tile, byte-identical to the LayerEncoder
+    (WriteLayer, write_layer.go:127-175): LineString/Polygon/Multi* command
+    streams, winding enforcement and ring closure.
 
     ``coords`` is ``array<array<array<double>>>`` (Polygon rings / an array
     of lines); for LineString the single line is ``coords[0]``. MultiPolygon
     also accepts 4-level ``array<array<array<array<double>>>>`` —
-    [polygon][ring][pt][xy], holes included — detected per row. Geometry
-    tables are dimension-sized relative to the point firehose (polygons per
-    admin area vs points per document), so a grouped ``applyInPandas`` with
-    per-feature Python is the right cost model here; the web-scale fact
-    path stays on ``encode_point_tiles``."""
+    [polygon][ring][pt][xy], holes included.
+
+    Routing: MultiPoint/line/polygon shapes with ``map<string,string>``
+    props always take the Arrow-native bulk encoder (encode_geom_tiles,
+    mapInArrow). Point shapes and JSON-string props (typed MVT values) take
+    a grouped ``applyInPandas`` over the scalar LayerEncoder, where the
+    MultiPolygon nesting is probed per row."""
     import json
-    import os
 
     from pyspark.sql.types import MapType, StringType
 
     from ..codec.encode import encode_layer
 
-    # bulk fast path: line/polygon geometry with map<string,string> props
-    # rides the cross-tile vectorized kernel (byte-identical output);
-    # JSON-string/typed props and point shapes stay on the scalar path
     ptype = features.schema["props"].dataType
     if (geom_type in _BULK_GEOM_TYPES
-            and os.environ.get("SPARK_GRAFT_BULK_GEOM", "1") != "0"
             and isinstance(ptype, MapType)
             and isinstance(ptype.keyType, StringType)
             and isinstance(ptype.valueType, StringType)):
@@ -994,95 +1098,53 @@ def decode_tile_vertices(tiles: DataFrame, scale_dim: float | None = None) -> Da
     """Full-geometry decode to exploded vertex rows in tile-local integer
     coords — the LoadGeometry int path (read_feature_lazy.go:162-291).
 
+    mapInArrow over the columnar vertex kernel (decode.decode_vertex_rows):
+    all tiles of an Arrow batch decode in one set of numpy passes, and the
+    output batch is built straight from its arrays — ``layer`` and
+    ``geojson_type`` by dictionary take, ``feature_id`` as int64 with a
+    null mask (id 0 or no id). A tile the kernel cannot reproduce exactly
+    takes the per-feature walk, for that tile only. Null tiles are skipped.
+
     With ``scale_dim`` also emits coords scaled by 1/dim with
     round-half-away-from-zero — ConvertGeometry / LoadGeometryScaled
     (read_feature_lazy.go:342-396, ``pbf.Round(x/dim, .5, 0)``)."""
-    from ..codec.decode import decode_tile
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_schema
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # Per-FEATURE scalar metadata + per-feature vertex arrays; the
-            # per-vertex expansion happens once at the end with np.repeat —
-            # no per-vertex Python (the bulk treatment the point decoder got,
-            # see VERDICT r2 next-round #1).
-            meta_z, meta_x, meta_y = [], [], []
-            meta_layer, meta_fid, meta_gt = [], [], []
-            counts = []            # vertices per feature
-            rings_per_feat = []    # rings per feature
-            all_ring_lens = []     # flat: vertices per ring, across features
-            xs_parts, ys_parts = [], []
-            for z, x, y, buf in zip(pdf["z"], pdf["x"], pdf["y"],
-                                    pdf["tile_pbf"]):
-                if buf is None:
-                    continue
-                for lname, f in decode_tile(bytes(buf), int(z), int(x),
-                                            int(y), mode="int"):
-                    n = sum(f.ring_lens)
-                    if n == 0:
-                        continue
-                    meta_z.append(int(z)); meta_x.append(int(x))
-                    meta_y.append(int(y)); meta_layer.append(lname)
-                    meta_fid.append(f.feature_id)
-                    meta_gt.append(f.geojson_type)
-                    counts.append(n)
-                    rings_per_feat.append(len(f.ring_lens))
-                    all_ring_lens.extend(f.ring_lens)
-                    xs_parts.append(f.xs)
-                    ys_parts.append(f.ys)
-            if counts:
-                cnt = np.asarray(counts, dtype=np.int64)
-                # ring_idx / pt_idx computed ONCE at batch level:
-                # ring index within its feature, repeated per vertex …
-                lens = np.asarray(all_ring_lens, dtype=np.int64)
-                rpf = np.asarray(rings_per_feat, dtype=np.int64)
-                ring_off = np.repeat(np.cumsum(rpf) - rpf, rpf)
-                ring_in_feat = np.arange(len(lens), dtype=np.int64) - ring_off
-                ring_idx = np.repeat(ring_in_feat.astype(np.int32), lens)
-                # … and vertex index within its ring.
-                vert_off = np.repeat(np.cumsum(lens) - lens, lens)
-                pt_idx = (np.arange(int(lens.sum()), dtype=np.int64)
-                          - vert_off).astype(np.int32)
-                out = pd.DataFrame({
-                    "z": np.repeat(np.asarray(meta_z, np.int32), cnt),
-                    "x": np.repeat(np.asarray(meta_x, np.int64), cnt),
-                    "y": np.repeat(np.asarray(meta_y, np.int64), cnt),
-                    "layer": np.repeat(np.asarray(meta_layer, object), cnt),
-                    # feature_id may be None (id field absent in the wire);
-                    # object-repeat + nullable Int64 keeps bigint-with-null.
-                    "feature_id": pd.array(
-                        np.repeat(np.asarray(meta_fid, object), cnt),
-                        dtype="Int64"),
-                    "geojson_type": np.repeat(np.asarray(meta_gt, object), cnt),
-                    "ring_idx": ring_idx,
-                    "pt_idx": pt_idx,
-                    "ix": np.concatenate(xs_parts).astype(np.int64),
-                    "iy": np.concatenate(ys_parts).astype(np.int64),
-                })
-            else:
-                out = pd.DataFrame({
-                    "z": np.array([], np.int32), "x": np.array([], np.int64),
-                    "y": np.array([], np.int64),
-                    "layer": np.array([], object),
-                    "feature_id": np.array([], np.int64),
-                    "geojson_type": np.array([], object),
-                    "ring_idx": np.array([], np.int32),
-                    "pt_idx": np.array([], np.int32),
-                    "ix": np.array([], np.int64),
-                    "iy": np.array([], np.int64),
-                })
-            if scale_dim is not None:
-                for src, dst in (("ix", "sx"), ("iy", "sy")):
-                    v = out[src].to_numpy(np.float64) / float(scale_dim)
-                    out[dst] = (np.sign(v) *
-                                np.floor(np.abs(v) + 0.5)).astype(np.int64)
-            yield out
-
-    schema = ("z int, x bigint, y bigint, layer string, feature_id bigint, "
-              "geojson_type string, ring_idx int, pt_idx int, "
-              "ix bigint, iy bigint")
+    fields = [("z", pa.int32()), ("x", pa.int64()), ("y", pa.int64()),
+              ("layer", pa.string()), ("feature_id", pa.int64()),
+              ("geojson_type", pa.string()), ("ring_idx", pa.int32()),
+              ("pt_idx", pa.int32()), ("ix", pa.int64()), ("iy", pa.int64())]
     if scale_dim is not None:
-        schema += ", sx bigint, sy bigint"
-    return tiles.mapInPandas(run, schema)
+        fields += [("sx", pa.int64()), ("sy", pa.int64())]
+    out_schema = pa.schema(fields)
+
+    def run(batches):
+        from ..codec.decode import (GEOJSON_TYPES, decode_vertex_rows,
+                                    round_half_away)
+        gj_names = pa.array(GEOJSON_TYPES, pa.string())
+        for rb in batches:
+            c = decode_vertex_rows(rb.column("tile_pbf").to_pylist())
+            t = c["tile"]
+            if not len(t):
+                continue
+            zs, xs, ys = (rb.column(k).to_numpy(zero_copy_only=False)[t]
+                          for k in ("z", "x", "y"))
+            arrays = [
+                pa.array(zs.astype(np.int32)), pa.array(xs.astype(np.int64)),
+                pa.array(ys.astype(np.int64)),
+                pa.array(c["layer_names"], pa.string()).take(c["layer"]),
+                pa.array(c["feature_id"], pa.int64(), mask=~c["fid_valid"]),
+                gj_names.take(c["geojson_type"]),
+                pa.array(c["ring_idx"]), pa.array(c["pt_idx"]),
+                pa.array(c["ix"]), pa.array(c["iy"])]
+            if scale_dim is not None:
+                arrays += [pa.array(round_half_away(c["ix"], scale_dim)),
+                           pa.array(round_half_away(c["iy"], scale_dim))]
+            yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
+
+    return tiles.select("z", "x", "y", "tile_pbf").mapInArrow(
+        run, from_arrow_schema(out_schema))
 
 
 def decode_tile_props_typed(tiles: DataFrame,
@@ -1128,13 +1190,16 @@ def decode_tile_props_typed(tiles: DataFrame,
 
 def tile_stats(tiles: DataFrame) -> DataFrame:
     """Header-only scan: layer names + feature counts without decoding
-    features — the NewTile lazy-catalog path (read_tile.go:20-44)."""
+    features — the NewTile lazy-catalog path (read_tile.go:20-44). Null
+    tiles are skipped, as in every other decode entry point."""
     from ..codec.decode import parse_tile
 
     def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for z, x, y, buf in zip(pdf["z"], pdf["x"], pdf["y"], pdf["tile_pbf"]):
+                if buf is None:
+                    continue
                 for lf in parse_tile(bytes(buf)):
                     rows.append((int(z), int(x), int(y), lf.name,
                                  len(lf.feature_spans), lf.extent, lf.version,
