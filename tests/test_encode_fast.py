@@ -274,18 +274,6 @@ def test_geom_bulk_degenerate_inputs_raise_like_scalar():
             np.array([3, 0]), np.array([0, 0]), np.array([True, False]))
 
 
-def test_is_4level_skips_empty_prefix():
-    """Round-5 review: a 4-level MultiPolygon whose FIRST polygon or ring
-    is empty must still route to the 4-level branch."""
-    from vector_tile_go_spark.sparkops.udfs import _is_4level
-    tri = [[0.0, 0.0], [1.0, 0.0], [0.5, 1.0]]
-    assert _is_4level([[tri]])
-    assert _is_4level([[], [[*tri]]])          # empty first polygon
-    assert not _is_4level([tri])               # 3-level
-    assert not _is_4level([[], tri])           # 3-level, empty first ring
-    assert not _is_4level([])
-
-
 def test_geom_bulk_multipoint_byte_identity():
     """MultiPoint through the bulk kernel: one MoveTo header with the
     ORIGINAL point count, zero-delta duplicates dropped from the stream

@@ -98,3 +98,43 @@ def test_value_variant_preserved_through_transcode():
     assert got["s"] == "str" and got["f64"] == 2.5
     assert abs(float(got["f32"]) - 1.25) < 1e-6
     assert got["i"] == -3 and got["u"] == 9 and got["b"] is False
+
+
+def test_geobuf_spark_stream_straddles_batches(spark):
+    """encode_geobuf_tiles -> transcode_geobuf_tiles over the Arrow carry,
+    with one partition at 7 records per Arrow batch so tile groups
+    straddle batches: every tile keeps its feature count, and the decoded
+    (id, url, mention_idx) set equals the input rows."""
+    import pandas as pd
+
+    from vector_tile_go_spark import tilemath as tm
+    from vector_tile_go_spark.sparkops.udfs import (encode_geobuf_tiles,
+                                                    transcode_geobuf_tiles)
+    z, rows = 12, []
+    for t in range(5):
+        x, y = 700 + t, 1635
+        w, s, e, n = tm.tile_bounds(z, x, y)
+        for i in range(t + 2):              # 2..6 features per tile
+            doc = 10 * t + i + 1
+            rows.append((z, x, y, w + (0.1 + 0.1 * i) * (e - w),
+                         s + (0.2 + 0.1 * i) * (n - s), doc, f"u{doc}", i))
+    pdf = pd.DataFrame(rows, columns=["z", "x", "y", "lng", "lat", "doc_id",
+                                      "url", "mention_idx"])
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        gbt = encode_geobuf_tiles(spark.createDataFrame(pdf), n_partitions=1)
+        out = transcode_geobuf_tiles(gbt, layer_name="geo").collect()
+    finally:
+        spark.conf.set(key, old)
+    want_n = pdf.groupby(["x", "y"]).size().to_dict()
+    assert {(r["x"], r["y"]): r["n_features"] for r in out} == want_n
+    got = set()
+    for r in out:
+        feats = decode_tile(bytes(r["tile_pbf"]), r["z"], r["x"], r["y"])
+        assert len(feats) == r["n_features"]
+        got |= {(f.feature_id, f.properties["url"],
+                 f.properties["mention_idx"]) for _, f in feats}
+    assert got == {(d, u, str(m)) for d, u, m in
+                   zip(pdf["doc_id"], pdf["url"], pdf["mention_idx"])}

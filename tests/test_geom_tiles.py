@@ -140,7 +140,6 @@ def test_bulk_geom_stream_multi_tile_batches(spark):
 
     import vector_tile_go_spark.tilemath as tm
     from vector_tile_go_spark.codec.encode import encode_layer
-    from vector_tile_go_spark.sparkops.udfs import encode_geom_tiles
     z = 6
     rows = []
     for t in range(12):           # 12 tiles, 3 triangles each
@@ -156,8 +155,8 @@ def test_bulk_geom_stream_multi_tile_batches(spark):
               "coords array<array<array<double>>>, "
               "props map<string,string>")
     out = {(r["x"]): r for r in
-           encode_geom_tiles(df, "Polygon", layer_name="g",
-                             n_partitions=2).collect()}
+           encode_geojson_tiles(df, "Polygon", layer_name="g",
+                                n_partitions=2).collect()}
     assert len(out) == 12
     for t in range(12):
         x, y = 10 + t, 20
@@ -182,7 +181,6 @@ def test_bulk_geom_stream_nonuniform_props_fallback(spark):
 
     import vector_tile_go_spark.tilemath as tm
     from vector_tile_go_spark.codec.encode import encode_layer
-    from vector_tile_go_spark.sparkops.udfs import encode_geom_tiles
     z, x, y = 6, 10, 20
     w, s, e, n = map(float, tm.tile_bounds(z, x, y))
     tri1 = [[w + .1 * (e - w), s + .1 * (n - s)],
@@ -197,7 +195,7 @@ def test_bulk_geom_stream_nonuniform_props_fallback(spark):
         rows, "z int, x long, y long, feature_id long, "
               "coords array<array<array<double>>>, "
               "props map<string,string>")
-    out = encode_geom_tiles(df, "Polygon", layer_name="g").collect()
+    out = encode_geojson_tiles(df, "Polygon", layer_name="g").collect()
     assert len(out) == 1
     feats = [{"type": "Polygon", "coordinates": [tri1],
               "properties": {"nk": "0"}, "id": 1},
@@ -225,6 +223,7 @@ def _arrow_boundary_rows(geom_type, z=6, n_tiles=4, per_tile=3):
             hole = [p(.3, .3 + d), p(.35, .35), p(.3 + d, .4)]
             other = [p(.7, .7), p(.9, .75 + d), p(.8, .9)]
             geom, coords = {
+                "Point": ([[ring[0]]], ring[0]),
                 "LineString": ([ring], ring),
                 "MultiPoint": ([ring + [ring[1]]], ring + [ring[1]]),
                 "MultiLineString": ([ring, other], [ring, other]),
@@ -251,7 +250,6 @@ def test_encode_geom_tiles_arrow_boundary_byte_identity(spark):
     their tile to the scalar fallback — at 7 records per Arrow batch, so
     tile groups straddle batch boundaries."""
     from vector_tile_go_spark.codec.encode import encode_layer
-    from vector_tile_go_spark.sparkops.udfs import encode_geom_tiles
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key)
     spark.conf.set(key, "7")
@@ -273,13 +271,59 @@ def test_encode_geom_tiles_arrow_boundary_byte_identity(spark):
                       "props map<string,string>")
             # one partition: 12 sorted rows in batches of 7, so the
             # 3-feature tile at rows 6-8 spans two batches
-            out = encode_geom_tiles(df, gt.rstrip("34"), layer_name="g",
-                                    n_partitions=1)
+            out = encode_geojson_tiles(df, gt.rstrip("34"), layer_name="g",
+                                       n_partitions=1)
             got = {(r["x"], r["y"]): r for r in out.collect()}
             assert sorted(got) == sorted(feats), gt
             for (x, y), fs in feats.items():
                 want = encode_layer(fs, 6, x, y, "g", extent_clamp=False)
                 assert bytes(got[(x, y)]["tile_pbf"]) == want, (gt, x)
+                assert got[(x, y)]["n_features"] == len(fs)
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_scalar_route_json_and_point_props_byte_identity(spark):
+    """Tile groups the bulk encoder does not take go to the per-tile
+    encode_layer oracle inside the same mapInArrow: JSON-string props
+    (str/int/float/bool) on Point, LineString, Polygon and 4-level
+    MultiPolygon, and Point with map<string,string> props. Every tile is
+    byte-identical to encode_layer over the json.loads'd features, at 7
+    records per Arrow batch so tile groups straddle batches."""
+    import json
+
+    from vector_tile_go_spark.codec.encode import encode_layer
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        for gt, ptype in (("Point", "string"), ("LineString", "string"),
+                          ("Polygon", "string"), ("MultiPolygon4", "string"),
+                          ("Point", "map<string,string>")):
+            rows, feats = _arrow_boundary_rows(gt)
+            if ptype == "string":
+                by_id = {}
+                for i, r in enumerate(rows):
+                    fid = r[3]
+                    by_id[fid] = json.dumps(
+                        {"name": f"n{fid}", "nk": fid, "frac": fid / 7.0,
+                         "flag": fid % 2 == 0})
+                    rows[i] = r[:5] + (by_id[fid],)
+                for fs in feats.values():
+                    for f in fs:
+                        f["properties"] = json.loads(by_id[f["id"]])
+            depth = "array<" * (4 if gt == "MultiPolygon4" else 3)
+            df = spark.createDataFrame(
+                rows, "z int, x long, y long, feature_id long, "
+                      f"coords {depth}double{'>' * depth.count('<')}, "
+                      f"props {ptype}")
+            out = encode_geojson_tiles(df, gt.rstrip("34"), layer_name="g",
+                                       n_partitions=1)
+            got = {(r["x"], r["y"]): r for r in out.collect()}
+            assert sorted(got) == sorted(feats), (gt, ptype)
+            for (x, y), fs in feats.items():
+                want = encode_layer(fs, 6, x, y, "g", extent_clamp=False)
+                assert bytes(got[(x, y)]["tile_pbf"]) == want, (gt, ptype, x)
                 assert got[(x, y)]["n_features"] == len(fs)
     finally:
         spark.conf.set(key, old)

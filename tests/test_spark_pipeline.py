@@ -111,29 +111,47 @@ def test_tile_stats_lazy_scan(spark, sf_dir):
     assert (s["version"] == 2).all()
 
 
-def test_encode_arrow_pandas_byte_parity(spark, sf_dir):
-    """The mapInArrow encode boundary must produce byte-identical tiles to
-    the mapInPandas path (same kernel, same group slicing) — including the
-    salted multi-frame variant's partials."""
-    from pyspark.sql import functions as F
+def _point_oracle(pdf, prop_cols=("url", "mention_idx")):
+    """{(z, x, y): (encode_layer bytes, n_features)} over each tile's rows
+    in the encoder's sort order (id, props), props rendered with str()."""
+    from vector_tile_go_spark.codec.encode import encode_layer
+    out = {}
+    pdf = pdf.sort_values(["z", "x", "y", "doc_id", *prop_cols])
+    for (z, x, y), g in pdf.groupby(["z", "x", "y"], sort=False):
+        feats = [{"type": "Point",
+                  "coordinates": [float(r["lng"]), float(r["lat"])],
+                  "properties": {c: str(r[c]) for c in prop_cols},
+                  "id": int(r["doc_id"]) or None}
+                 for _, r in g.iterrows()]
+        out[(int(z), int(x), int(y))] = (
+            encode_layer(feats, int(z), int(x), int(y), "geo"), len(feats))
+    return out
+
+
+def test_encode_point_tiles_oracle_byte_identity(spark, sf_dir):
+    """Every tile of the mapInArrow point encoder is byte-identical to the
+    scalar encode_layer oracle over the same rows, with the int
+    mention_idx column rendered as str."""
     from vector_tile_go_spark.queries import entities_df
     from vector_tile_go_spark.sparkops.udfs import encode_point_tiles
 
     e = entities_df(spark, sf_dir).filter(F.col("doc_id") < 500)
-    a = encode_point_tiles(e, prop_cols=("url", "mention_idx"),
-                           use_arrow=True)
-    p = encode_point_tiles(e, prop_cols=("url", "mention_idx"),
-                           use_arrow=False)
-    am = {(r["z"], r["x"], r["y"]): bytes(r["tile_pbf"]) for r in a.collect()}
-    pm = {(r["z"], r["x"], r["y"]): bytes(r["tile_pbf"]) for r in p.collect()}
-    assert am == pm and len(am) > 0
+    pdf = e.select("z", "x", "y", "lng", "lat", "doc_id", "url",
+                   "mention_idx").toPandas()
+    assert pdf["mention_idx"].dtype.kind == "i"
+    want = _point_oracle(pdf)
+    got = {(r["z"], r["x"], r["y"]): r for r in encode_point_tiles(
+        e, prop_cols=("url", "mention_idx")).collect()}
+    assert sorted(got) == sorted(want) and len(want) > 0
+    for k, (buf, n) in want.items():
+        assert bytes(got[k]["tile_pbf"]) == buf, k
+        assert got[k]["n_features"] == n
 
 
-def test_encode_null_props_arrow_pandas_parity(spark):
-    """Null property values must encode identically on both boundary
-    paths (pandas astype(str) renders None as 'None'; the arrow path must
-    not crash or diverge) — review finding r2."""
-    import pandas as pd
+def test_encode_null_props_oracle_byte_identity(spark):
+    """Null property values render as 'None' (pandas astype(str) parity)
+    instead of crashing: the tile is byte-identical to encode_layer over
+    those strings — review finding r2."""
     from vector_tile_go_spark import tilemath as tm
     from vector_tile_go_spark.sparkops.udfs import (decode_tiles,
                                                     encode_point_tiles)
@@ -147,16 +165,16 @@ def test_encode_null_props_arrow_pandas_parity(spark):
         "url": ["u1", None, "u3", None],
         "mention_idx": ["0", "1", None, "2"]})
     df = spark.createDataFrame(pdf)
-    a = encode_point_tiles(df, prop_cols=("url", "mention_idx"),
-                           use_arrow=True).collect()
-    p = encode_point_tiles(df, prop_cols=("url", "mention_idx"),
-                           use_arrow=False).collect()
-    assert len(a) == len(p) == 1
-    assert bytes(a[0]["tile_pbf"]) == bytes(p[0]["tile_pbf"])
-    feats = decode_tiles(encode_point_tiles(
-        df, prop_cols=("url", "mention_idx")), mode="props").collect()
+    tiles = encode_point_tiles(df, prop_cols=("url", "mention_idx"))
+    a = tiles.collect()
+    want = _point_oracle(pdf)
+    assert list(want) == [(z, x, y)] and len(a) == 1
+    assert bytes(a[0]["tile_pbf"]) == want[(z, x, y)][0]
+    feats = decode_tiles(tiles, mode="props").collect()
     assert sorted(f["properties"]["url"] for f in feats) == \
         ["None", "None", "u1", "u3"]
+    assert sorted(f["properties"]["mention_idx"] for f in feats) == \
+        ["0", "1", "2", "None"]
 
 
 def test_upsert_splice_multirow_existing_keys(spark):

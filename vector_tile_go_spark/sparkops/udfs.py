@@ -1,14 +1,15 @@
-"""Spark-facing codec operators: grouped-map encode, map-batch decode.
+"""Spark-facing codec operators: sorted-stream encode, map-batch decode.
 
 The one unavoidable Python boundary in the engine is the MVT byte codec —
 everything before (extraction, tile assignment) and after (aggregation,
 joins) stays JVM-side. Every UDF is Arrow-batched; no per-row Python
-anywhere. The hot paths use ``mapInArrow`` and build their output batches
-straight from numpy arrays: point and geometry encode (sorted-batch
-streaming into the bulk encoders) and full-geometry decode (the columnar
-vertex kernel). The remaining decode entry points and the scalar-oracle
-encode routes (typed props, Point shapes, geobuf) still cross as pandas
-frames (mapInPandas / applyInPandas).
+anywhere. Every encode entry point has one plan shape (_encode_plan):
+repartition on the tile key, sortWithinPartitions, then one streaming
+``mapInArrow`` whose sorted-group carry (_stream_sorted_arrow_groups)
+hands whole tile groups to a bulk kernel or, per tile, to the scalar
+encode_layer oracle; output batches are built straight from numpy arrays.
+Full-geometry decode is a mapInArrow over the columnar vertex kernel; the
+remaining decode entry points still cross as pandas frames (mapInPandas).
 
 Scale notes (the 100 TB story):
 - encode shuffles once on (z, x, y) — the same explicit boundary the
@@ -31,9 +32,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..codec.decode import decode_tile
-from ..codec.encode import encode_point_layer
-
 TILE_SCHEMA = "z int, x bigint, y bigint, layer string, tile_pbf binary, n_features int"
 
 FEATURE_SCHEMA = ("z int, x bigint, y bigint, layer string, feature_id bigint, "
@@ -41,187 +39,125 @@ FEATURE_SCHEMA = ("z int, x bigint, y bigint, layer string, feature_id bigint, "
                   "properties map<string,string>")
 
 
-def _encode_sorted_batches(batches: Iterator[pd.DataFrame], layer_name: str,
-                           prop_cols: tuple[str, ...], extent: int,
-                           id_col: str) -> Iterator[pd.DataFrame]:
-    """Streaming group-by over partition-sorted batches: rows arrive sorted
-    by (z, x, y, ...); tile groups are sliced out locally and a partial
-    group at a batch boundary is carried into the next batch. One Python
-    invocation per Arrow batch (thousands of tiles), NOT one per tile —
-    applyInPandas pays its UDF round-trip per *group*, which is the
-    dominant cost when tiles are small."""
-    from ..codec.encode_fast import encode_point_tiles_bulk
-
-    pending: pd.DataFrame | None = None
-    group_cols = ["z", "x", "y"]  # extended with 'salt' when present
-    cols = ["z", "x", "y", "layer", "tile_pbf", "n_features"]
-    first = True
-
-    def encode_batch(pdf: pd.DataFrame, starts, ends) -> pd.DataFrame:
-        props = {c: pdf[c].astype(str).to_numpy() for c in prop_cols}
-        # per-row z: the bulk projector broadcasts arrays fine
-        z = pdf["z"].to_numpy()
-        bufs = encode_point_tiles_bulk(
-            z, pdf["x"].to_numpy(), pdf["y"].to_numpy(),
-            pdf["lng"].to_numpy(), pdf["lat"].to_numpy(),
-            pdf[id_col].to_numpy(np.int64), props, starts, ends,
-            layer_name, extent)
-        xs = pdf["x"].to_numpy()[starts]
-        ys = pdf["y"].to_numpy()[starts]
-        zs = pdf["z"].to_numpy()[starts]
-        res = pd.DataFrame({"z": zs, "x": xs, "y": ys, "layer": layer_name,
-                            "tile_pbf": bufs,
-                            "n_features": (np.asarray(ends) -
-                                           np.asarray(starts)).astype("int32")})
-        if "salt" in pdf.columns:
-            res["salt"] = pdf["salt"].to_numpy()[starts]
-        return res
-
-    for pdf in batches:
-        if first:
-            first = False
-            if "salt" in pdf.columns:
-                group_cols = ["z", "x", "y", "salt"]
-                cols = cols + ["salt"]
-        if pending is not None:
-            pdf = pd.concat([pending, pdf], ignore_index=True)
-            pending = None
-        if not len(pdf):
-            continue
-        change = np.zeros(len(pdf) - 1, dtype=bool)
-        for c in group_cols:
-            v = pdf[c].to_numpy()
-            change |= v[1:] != v[:-1]
-        boundaries = np.flatnonzero(change) + 1
-        starts = np.concatenate([[0], boundaries])
-        ends = np.concatenate([boundaries, [len(pdf)]])
-        # hold the last group: it may continue in the next batch
-        if len(starts) > 1:
-            yield encode_batch(pdf, starts[:-1], ends[:-1])
-        pending = pdf.iloc[starts[-1]:]
-    if pending is not None and len(pending):
-        yield encode_batch(pending.reset_index(drop=True), np.array([0]),
-                           np.array([len(pending)]))
+def _col(rb, name: str) -> np.ndarray:
+    return rb.column(name).to_numpy(zero_copy_only=False)
 
 
-def _encode_sorted_batches_arrow(batches, layer_name: str,
-                                 prop_cols: tuple[str, ...], extent: int,
-                                 id_col: str):
-    """Arrow-native variant of _encode_sorted_batches (mapInArrow): columns
-    go pyarrow -> numpy with zero-copy where the type allows, and the
-    output RecordBatch is built directly — no pandas DataFrame
-    materialization on either side of the boundary. Same streaming
-    group-carry protocol; byte-identical tiles."""
+def _prop_strings(col) -> np.ndarray:
+    """Arrow prop column -> object ndarray of str for the encoders. Null-free
+    string columns pass through; anything else keeps pandas' astype(str)
+    rendering (None -> 'None', NaN -> 'nan', ints with nulls -> '1.0')."""
     import pyarrow as pa
+    vals = col.to_numpy(zero_copy_only=False)
+    if pa.types.is_string(col.type) and not col.null_count:
+        return vals
+    return pd.Series(vals).astype(str).to_numpy()
 
-    from ..codec.encode_fast import encode_point_tiles_bulk
 
-    group_cols = ["z", "x", "y"]
-    first = True
-    has_salt = False
-    pending: dict[str, np.ndarray] | None = None
-    out_schema = None
+def _tile_batch(zs, xs, ys, layer_name: str, bufs, n_features, salt=None):
+    """One output RecordBatch of TILE_SCHEMA (plus ``salt int`` when given),
+    built with the declared types (numpy's int64 defaults would not match
+    ``z int``)."""
+    import pyarrow as pa
+    arrays = [pa.array(np.asarray(zs), pa.int32()),
+              pa.array(np.asarray(xs), pa.int64()),
+              pa.array(np.asarray(ys), pa.int64()),
+              pa.array([layer_name] * len(bufs), pa.string()),
+              pa.array(bufs, pa.binary()),
+              pa.array(np.asarray(n_features), pa.int32())]
+    names = ["z", "x", "y", "layer", "tile_pbf", "n_features"]
+    if salt is not None:
+        arrays.append(pa.array(np.asarray(salt), pa.int32()))
+        names.append("salt")
+    return pa.RecordBatch.from_arrays(arrays, names=names)
 
-    def to_np(rb: "pa.RecordBatch") -> dict[str, np.ndarray]:
-        cols = {}
-        for name in rb.schema.names:
-            col = rb.column(rb.schema.get_field_index(name))
-            if name in prop_cols and (not pa.types.is_string(col.type)
-                                      or col.null_count):
-                # non-string or null-carrying props: python-str formatting
-                # parity with the pandas path's astype(str) (None -> 'None',
-                # NaN -> 'nan'); null-free string columns pass through
-                cols[name] = pd.Series(
-                    col.to_numpy(zero_copy_only=False)).astype(str).to_numpy()
-            else:
-                cols[name] = col.to_numpy(zero_copy_only=False)
-        return cols
 
-    def encode_arrays(arrs: dict[str, np.ndarray], starts, ends):
-        props = {c: arrs[c] for c in prop_cols}
-        bufs = encode_point_tiles_bulk(
-            arrs["z"], arrs["x"], arrs["y"], arrs["lng"], arrs["lat"],
-            np.asarray(arrs[id_col], dtype=np.int64), props, starts, ends,
-            layer_name, extent)
-        n = len(starts)
-        data = [
-            pa.array(np.asarray(arrs["z"])[starts], type=pa.int32()),
-            pa.array(np.asarray(arrs["x"])[starts], type=pa.int64()),
-            pa.array(np.asarray(arrs["y"])[starts], type=pa.int64()),
-            pa.array([layer_name] * n, type=pa.string()),
-            pa.array(bufs, type=pa.binary()),
-            pa.array((np.asarray(ends) - np.asarray(starts)).astype("int32"),
-                     type=pa.int32()),
-        ]
-        names = ["z", "x", "y", "layer", "tile_pbf", "n_features"]
-        if has_salt:
-            data.append(pa.array(np.asarray(arrs["salt"])[starts],
-                                 type=pa.int32()))
-            names.append("salt")
-        return pa.RecordBatch.from_arrays(data, names=names)
-
+def _stream_sorted_arrow_groups(batches, emit, group_cols=("z", "x", "y")):
+    """The sorted-batch carry over RecordBatches: rows arrive sorted by
+    ``group_cols``; emit(rb, starts, ends) gets a slice that its tile
+    groups cover exactly, and the last (possibly incomplete) group is
+    carried into the next batch by Arrow concatenation — nested and map
+    columns included, no conversion. One Python call per Arrow batch
+    (thousands of tiles), not one per tile as a grouped map would pay."""
+    import pyarrow as pa
+    pending = None
     for rb in batches:
-        if first:
-            first = False
-            has_salt = "salt" in rb.schema.names
-            if has_salt:
-                group_cols = ["z", "x", "y", "salt"]
-        arrs = to_np(rb)
         if pending is not None:
-            arrs = {k: np.concatenate([pending[k], arrs[k]])
-                    for k in arrs}
+            rb = pa.RecordBatch.from_arrays(
+                [pa.concat_arrays([p, c])
+                 for p, c in zip(pending.columns, rb.columns)],
+                schema=rb.schema)
             pending = None
-        m = len(arrs["z"])
+        m = rb.num_rows
         if not m:
             continue
         change = np.zeros(m - 1, dtype=bool)
         for c in group_cols:
-            v = arrs[c]
+            v = _col(rb, c)
             change |= v[1:] != v[:-1]
         boundaries = np.flatnonzero(change) + 1
         starts = np.concatenate([[0], boundaries])
         ends = np.concatenate([boundaries, [m]])
         if len(starts) > 1:
-            yield encode_arrays(arrs, starts[:-1], ends[:-1])
-        pending = {k: v[starts[-1]:] for k, v in arrs.items()}
-    if pending is not None and len(pending["z"]):
-        yield encode_arrays(pending, np.array([0]),
-                            np.array([len(pending["z"])]))
+            yield emit(rb.slice(0, int(ends[-2])), starts[:-1], ends[:-1])
+        pending = rb.slice(int(starts[-1]))
+    if pending is not None and pending.num_rows:
+        yield emit(pending, np.array([0]), np.array([pending.num_rows]))
+
+
+def _encode_plan(df: DataFrame, emit, schema: str, sort_cols,
+                 n_partitions: int | None = None,
+                 group_cols=("z", "x", "y")) -> DataFrame:
+    """The one encode plan: repartition on ``group_cols`` (the tile key),
+    sortWithinPartitions on ``group_cols + sort_cols`` (deterministic
+    feature order), then one streaming mapInArrow over the carry."""
+    if n_partitions is None:
+        n_partitions = df.sparkSession.sparkContext.defaultParallelism * 2
+    df = (df.repartition(n_partitions, *group_cols)
+          .sortWithinPartitions(*group_cols, *sort_cols))
+
+    def run(batches):
+        return _stream_sorted_arrow_groups(batches, emit, group_cols)
+
+    return df.mapInArrow(run, schema)
+
+
+def _point_emit(layer_name: str, prop_cols: tuple[str, ...], extent: int,
+                id_col: str, salted: bool = False):
+    """emit() of the point encoders: every tile group of the batch in one
+    encode_point_tiles_bulk call."""
+    from ..codec.encode_fast import encode_point_tiles_bulk
+
+    def emit(rb, starts, ends):
+        zs, xs, ys = _col(rb, "z"), _col(rb, "x"), _col(rb, "y")
+        bufs = encode_point_tiles_bulk(
+            zs, xs, ys, _col(rb, "lng"), _col(rb, "lat"),
+            np.asarray(_col(rb, id_col), dtype=np.int64),
+            {c: _prop_strings(rb.column(c)) for c in prop_cols},
+            starts, ends, layer_name, extent)
+        return _tile_batch(zs[starts], xs[starts], ys[starts], layer_name,
+                           bufs, ends - starts,
+                           _col(rb, "salt")[starts] if salted else None)
+
+    return emit
 
 
 def encode_point_tiles(entities: DataFrame, layer_name: str = "geo",
                        prop_cols: tuple[str, ...] = ("url", "mention_idx"),
                        extent: int = 4096, n_partitions: int | None = None,
-                       id_col: str = "doc_id",
-                       use_arrow: bool = True) -> DataFrame:
+                       id_col: str = "doc_id") -> DataFrame:
     """(z, x, y, lng, lat, <id_col>, props...) -> one MVT layer per tile.
 
     Plan: one shuffle — repartition on the tile key + sortWithinPartitions
-    (z, x, y, id, props) — then a single streaming map-batch UDF that
-    encodes every tile of the partition (deterministic feature order from
-    the sort). This is the reference's EP3 boundary (SURVEY.md §3) with
-    the per-group UDF overhead amortized across whole Arrow batches.
-    ``use_arrow`` routes through mapInArrow (no pandas materialization at
-    the boundary — the zero-copy path of SURVEY §2.10); tiles are
-    byte-identical either way."""
-    cols = ["z", "x", "y", "lng", "lat", id_col, *prop_cols]
-    df = entities.select(*cols)
-    if n_partitions is None:
-        n_partitions = df.sparkSession.sparkContext.defaultParallelism * 2
-    df = (df.repartition(n_partitions, "z", "x", "y")
-          .sortWithinPartitions("z", "x", "y", id_col, *prop_cols))
-
-    if use_arrow:
-        def run_arrow(batches):
-            return _encode_sorted_batches_arrow(batches, layer_name,
-                                                prop_cols, extent, id_col)
-        return df.mapInArrow(run_arrow, TILE_SCHEMA)
-
-    def run(batches):
-        return _encode_sorted_batches(batches, layer_name, prop_cols, extent,
-                                      id_col)
-
-    return df.mapInPandas(run, TILE_SCHEMA)
+    (z, x, y, id, props) — then a single streaming mapInArrow that encodes
+    every tile of the partition (deterministic feature order from the
+    sort). This is the reference's EP3 boundary (SURVEY.md §3) with the
+    per-group UDF overhead amortized across whole Arrow batches and no
+    pandas materialization on either side (the zero-copy path of
+    SURVEY §2.10)."""
+    df = entities.select("z", "x", "y", "lng", "lat", id_col, *prop_cols)
+    return _encode_plan(df, _point_emit(layer_name, prop_cols, extent, id_col),
+                        TILE_SCHEMA, (id_col, *prop_cols), n_partitions)
 
 
 def encode_point_tiles_salted(entities: DataFrame, layer_name: str = "geo",
@@ -234,19 +170,13 @@ def encode_point_tiles_salted(entities: DataFrame, layer_name: str = "geo",
     README.md:142-191); readers that merge same-named layers see one logical
     layer. The final concat is a tiny per-tile agg, so the heavy encode work
     spreads over n_salts times more tasks for hot tiles."""
-    cols = ["z", "x", "y", "lng", "lat", id_col, *prop_cols]
-    df = entities.select(*cols).withColumn(
-        "salt", F.pmod(F.xxhash64(id_col), F.lit(n_salts)).cast("int"))
-    n_parts = df.sparkSession.sparkContext.defaultParallelism * 2
-    df = (df.repartition(n_parts, "z", "x", "y", "salt")
-          .sortWithinPartitions("z", "x", "y", "salt", id_col, *prop_cols))
-
-    def run(batches):
-        return _encode_sorted_batches_arrow(batches, layer_name, prop_cols,
-                                            4096, id_col)
-
-    partials = df.mapInArrow(
-        run, TILE_SCHEMA + ", salt int").drop("layer")
+    df = (entities.select("z", "x", "y", "lng", "lat", id_col, *prop_cols)
+          .withColumn("salt",
+                      F.pmod(F.xxhash64(id_col), F.lit(n_salts)).cast("int")))
+    partials = _encode_plan(
+        df, _point_emit(layer_name, prop_cols, 4096, id_col, salted=True),
+        TILE_SCHEMA + ", salt int", (id_col, *prop_cols),
+        group_cols=("z", "x", "y", "salt")).drop("layer")
     # per-tile binary concat of the (few) partials, ordered by salt for
     # determinism; this is the O(1) compositing union — no re-encode.
     # F.aggregate + F.concat stays JVM-side (whole-stage codegen), no
@@ -488,6 +418,17 @@ def decode_tiles(tiles: DataFrame, mode: str = "lnglat",
     return tiles.mapInPandas(decode_batch, schema)
 
 
+# decode_tile_stats' batch-kernel routing: tiles above _BULK_DECODE_MAX_TILE
+# bytes take the per-tile walk; the rest go to the kernel in chunks of at
+# most _BULK_DECODE_CHUNK tiles and _BULK_DECODE_BYTES wire bytes. 256 KB:
+# the kernel's int64 matrices expand ~30x, so this keeps each chunk's
+# temporaries ~8 MB (cache-adjacent, under the host's streaming-pass
+# inflation threshold).
+_BULK_DECODE_MAX_TILE = 4096
+_BULK_DECODE_CHUNK = 1024
+_BULK_DECODE_BYTES = 1 << 18
+
+
 def decode_tile_stats(tiles: DataFrame, layers: list[str] | None = None,
                       distinct_prop: str = "url",
                       out_col: str = "n_urls",
@@ -550,10 +491,7 @@ def decode_tile_stats(tiles: DataFrame, layers: list[str] | None = None,
         return n, len(vals)
 
     def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import os
-
         from ..codec.decode import bulk_point_tile_stats
-        use_bulk = os.environ.get("SPARK_GRAFT_BULK_DECODE", "1") != "0"
         for pdf in batches:
             # cross-tile fused fast path: one varint pass over the whole
             # batch's conforming tiles (per-tile numpy setup amortized —
@@ -565,54 +503,39 @@ def decode_tile_stats(tiles: DataFrame, layers: list[str] | None = None,
             if not keep:
                 continue
             bufs = [r[3] for r in keep]
-            if use_bulk:
-                # The batch kernel wins where the per-tile walk's fixed
-                # numpy setup dominates — SPARSE tiles (few features). On
-                # dense tiles (KBs of features each) the walk is already
-                # amortized and the kernel's big streaming temporaries
-                # lose (this sandbox's guest kernel inflates sustained
-                # streaming passes ~10x, BASELINE.md r3/r4). Route by
-                # tile size; chunk the sparse set by tiles AND bytes so
-                # the working set stays cache-resident.
-                max_tile = int(os.environ.get(
-                    "SPARK_GRAFT_BULK_DECODE_MAX_TILE", "4096"))
-                chunk = int(os.environ.get("SPARK_GRAFT_BULK_DECODE_CHUNK",
-                                           "1024"))
-                # 256 KB of wire bytes per chunk: the kernel's int64
-                # matrices expand ~30x, so this keeps each chunk's
-                # temporaries ~8 MB (cache-adjacent, under the host's
-                # streaming-pass inflation threshold)
-                byte_budget = int(os.environ.get(
-                    "SPARK_GRAFT_BULK_DECODE_BYTES", str(1 << 18)))
-                ns = np.zeros(len(bufs), dtype=np.int64)
-                nvs = np.zeros(len(bufs), dtype=np.int64)
-                handled = np.zeros(len(bufs), dtype=bool)
-                small = [i for i, b in enumerate(bufs) if len(b) <= max_tile]
-                lo = 0
-                while lo < len(small):
-                    hi, acc = lo, 0
-                    while hi < len(small) and hi - lo < chunk and \
-                            acc < byte_budget:
-                        acc += len(bufs[small[hi]])
-                        hi += 1
-                    sel = small[lo:hi]
-                    # Any kernel exception degrades this chunk to the
-                    # quarantined per-tile walk (handled stays False) —
-                    # one corrupt tile must never fail the Spark task
-                    # (ADVICE r4 high: decode_tile_stats' per-tile
-                    # isolation contract).
-                    try:
-                        cns, cnvs, ch = bulk_point_tile_stats(
-                            [bufs[i] for i in sel], distinct_prop, layers)
-                    except Exception:  # noqa: BLE001 — isolate chunk
-                        lo = hi
-                        continue
-                    for k, i in enumerate(sel):
-                        ns[i], nvs[i], handled[i] = cns[k], cnvs[k], ch[k]
+            # The batch kernel wins where the per-tile walk's fixed numpy
+            # setup dominates — SPARSE tiles (few features). On dense tiles
+            # (KBs of features each) the walk is already amortized and the
+            # kernel's big streaming temporaries lose (the 4-vCPU bench VM's
+            # guest kernel inflates sustained streaming passes ~10x,
+            # BASELINE.md r3/r4). Route by tile size; chunk the sparse set by
+            # tiles AND bytes so the working set stays cache-resident.
+            ns = np.zeros(len(bufs), dtype=np.int64)
+            nvs = np.zeros(len(bufs), dtype=np.int64)
+            handled = np.zeros(len(bufs), dtype=bool)
+            small = [i for i, b in enumerate(bufs)
+                     if len(b) <= _BULK_DECODE_MAX_TILE]
+            lo = 0
+            while lo < len(small):
+                hi, acc = lo, 0
+                while hi < len(small) and hi - lo < _BULK_DECODE_CHUNK and \
+                        acc < _BULK_DECODE_BYTES:
+                    acc += len(bufs[small[hi]])
+                    hi += 1
+                sel = small[lo:hi]
+                # Any kernel exception degrades this chunk to the
+                # quarantined per-tile walk (handled stays False) — one
+                # corrupt tile must never fail the Spark task (ADVICE r4
+                # high: decode_tile_stats' per-tile isolation contract).
+                try:
+                    cns, cnvs, ch = bulk_point_tile_stats(
+                        [bufs[i] for i in sel], distinct_prop, layers)
+                except Exception:  # noqa: BLE001 — isolate chunk
                     lo = hi
-            else:
-                ns = nvs = None
-                handled = np.zeros(len(keep), dtype=bool)
+                    continue
+                for k, i in enumerate(sel):
+                    ns[i], nvs[i], handled[i] = cns[k], cnvs[k], ch[k]
+                lo = hi
             rows = []
             for i, (z, x, y, buf) in enumerate(keep):
                 if handled[i]:
@@ -725,155 +648,59 @@ def encode_geobuf_tiles(entities: DataFrame,
     Same single-shuffle plan as encode_point_tiles; the geobuf feature
     framing itself is a small per-feature kernel inside the Arrow batch
     (compat ingestion codec, not the bulk hot path)."""
+    import pyarrow as pa
+
     from ..codec.geobuf import encode_geobuf_feature
     from ..codec.wire import encode_varint
 
-    cols = ["z", "x", "y", "lng", "lat", id_col, *prop_cols]
-    df = entities.select(*cols)
-    if n_partitions is None:
-        n_partitions = df.sparkSession.sparkContext.defaultParallelism * 2
-    df = (df.repartition(n_partitions, "z", "x", "y")
-          .sortWithinPartitions("z", "x", "y", id_col, *prop_cols))
-
-    def emit(pdf: pd.DataFrame, starts, ends) -> pd.DataFrame:
-        zs, xs, ys = (pdf[c].to_numpy() for c in ("z", "x", "y"))
-        lng, lat = pdf["lng"].to_numpy(), pdf["lat"].to_numpy()
-        ids = pdf[id_col].to_numpy()
-        pvals = {c: pdf[c].astype(str).to_numpy() for c in prop_cols}
-        out = []
-        for s, e in zip(starts, ends):
+    def emit(rb, starts, ends):
+        zs, xs, ys = _col(rb, "z"), _col(rb, "x"), _col(rb, "y")
+        lng, lat, ids = _col(rb, "lng"), _col(rb, "lat"), _col(rb, id_col)
+        pvals = {c: _prop_strings(rb.column(c)) for c in prop_cols}
+        blobs = []
+        for s, e in zip(starts.tolist(), ends.tolist()):
             blob = bytearray()
             for i in range(s, e):
                 m = encode_geobuf_feature(
                     "Point", [float(lng[i]), float(lat[i])],
                     {c: pvals[c][i] for c in prop_cols}, int(ids[i]))
                 blob += encode_varint(len(m)) + m
-            out.append((int(zs[s]), int(xs[s]), int(ys[s]),
-                        bytes(blob), e - s))
-        return pd.DataFrame(out, columns=["z", "x", "y", "geobuf",
-                                          "n_features"])
+            blobs.append(bytes(blob))
+        return pa.RecordBatch.from_arrays(
+            [pa.array(zs[starts], pa.int32()), pa.array(xs[starts], pa.int64()),
+             pa.array(ys[starts], pa.int64()), pa.array(blobs, pa.binary()),
+             pa.array(ends - starts, pa.int32())],
+            names=["z", "x", "y", "geobuf", "n_features"])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return _stream_sorted_tile_groups(batches, emit)
-
-    return df.mapInPandas(
-        run, "z int, x bigint, y bigint, geobuf binary, n_features int")
+    df = entities.select("z", "x", "y", "lng", "lat", id_col, *prop_cols)
+    return _encode_plan(
+        df, emit, "z int, x bigint, y bigint, geobuf binary, n_features int",
+        (id_col, *prop_cols), n_partitions)
 
 
 def transcode_geobuf_tiles(gb_tiles: DataFrame,
                            layer_name: str = "geo") -> DataFrame:
     """Per-tile geobuf stream -> serialized MVT layer (WriteLayerGeobuf,
-    write_layer.go:218-267). Embarrassingly parallel per tile row; output is
-    byte-identical to the direct encode path of the quantized features."""
+    write_layer.go:218-267). Embarrassingly parallel per tile row (a plain
+    mapInArrow, no shuffle); output is byte-identical to the direct encode
+    path of the quantized features."""
     from ..codec.geobuf import transcode_geobuf_layer
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for z, x, y, blob, nf in zip(pdf["z"], pdf["x"], pdf["y"],
-                                         pdf["geobuf"], pdf["n_features"]):
-                buf = transcode_geobuf_layer(bytes(blob), int(z), int(x),
-                                             int(y), layer_name)
-                rows.append((int(z), int(x), int(y), layer_name, buf, int(nf)))
-            yield pd.DataFrame(rows, columns=["z", "x", "y", "layer",
-                                              "tile_pbf", "n_features"])
+    def run(batches):
+        for rb in batches:
+            zs, xs, ys = _col(rb, "z"), _col(rb, "x"), _col(rb, "y")
+            bufs = [transcode_geobuf_layer(blob, z, x, y, layer_name)
+                    for z, x, y, blob in zip(zs.tolist(), xs.tolist(),
+                                             ys.tolist(),
+                                             rb.column("geobuf").to_pylist())]
+            yield _tile_batch(zs, xs, ys, layer_name, bufs,
+                              _col(rb, "n_features"))
 
-    return gb_tiles.mapInPandas(run, TILE_SCHEMA)
+    return gb_tiles.mapInArrow(run, TILE_SCHEMA)
 
 
 _BULK_GEOM_TYPES = ("MultiPoint", "LineString", "MultiLineString",
                     "Polygon", "MultiPolygon")
-
-
-def _stream_sorted_tile_groups(batches, emit, group_cols=("z", "x", "y")):
-    """Shared sorted-batch carry protocol for pandas tile-group streams:
-    concat the carried tail, find group boundaries, hand emit() ONLY the
-    rows of complete groups (trimmed to the last boundary), carry the
-    final (possibly incomplete) group into the next batch. The invariant
-    — emit's input is EXACTLY covered by its slices (round-5 review) — is
-    shared with its mapInArrow twin, _stream_sorted_arrow_groups."""
-    pending = None
-    for pdf in batches:
-        if pending is not None:
-            pdf = pd.concat([pending, pdf], ignore_index=True)
-            pending = None
-        if not len(pdf):
-            continue
-        change = np.zeros(len(pdf) - 1, dtype=bool)
-        for c in group_cols:
-            v = pdf[c].to_numpy()
-            change |= v[1:] != v[:-1]
-        boundaries = np.flatnonzero(change) + 1
-        starts = np.concatenate([[0], boundaries])
-        ends = np.concatenate([boundaries, [len(pdf)]])
-        if len(starts) > 1:
-            yield emit(pdf.iloc[:int(ends[-2])], starts[:-1], ends[:-1])
-        pending = pdf.iloc[starts[-1]:]
-    if pending is not None and len(pending):
-        yield emit(pending.reset_index(drop=True),
-                   np.array([0]), np.array([len(pending)]))
-
-
-def _is_4level(coords) -> bool:
-    # [poly][ring][pt][xy] vs [ring][pt][xy]: probe the FIRST NON-EMPTY
-    # leaf chain (an empty first polygon/ring must not misroute the row,
-    # ADVICE-style review r5) — a coordinate scalar has no __len__, a
-    # [x, y] pair does
-    for a in coords:
-        if not hasattr(a, "__len__"):
-            return False
-        for b in a:
-            if not hasattr(b, "__len__"):
-                return False
-            for c in b:
-                return hasattr(c, "__len__")
-    return False
-
-
-def _tile_batch(zs, xs, ys, layer_name: str, bufs, n_features):
-    """One output RecordBatch of TILE_SCHEMA, built with the declared
-    types (numpy's int64 defaults would not match ``z int``)."""
-    import pyarrow as pa
-    return pa.RecordBatch.from_arrays(
-        [pa.array(np.asarray(zs), pa.int32()),
-         pa.array(np.asarray(xs), pa.int64()),
-         pa.array(np.asarray(ys), pa.int64()),
-         pa.array([layer_name] * len(bufs), pa.string()),
-         pa.array(bufs, pa.binary()),
-         pa.array(np.asarray(n_features), pa.int32())],
-        names=["z", "x", "y", "layer", "tile_pbf", "n_features"])
-
-
-def _stream_sorted_arrow_groups(batches, emit, group_cols=("z", "x", "y")):
-    """mapInArrow twin of _stream_sorted_tile_groups: the same carry
-    protocol over RecordBatches. emit(rb, starts, ends) gets a slice that
-    its tile groups cover exactly; the last (possibly incomplete) group is
-    carried into the next batch by Arrow concatenation — nested and map
-    columns included, no conversion."""
-    import pyarrow as pa
-    pending = None
-    for rb in batches:
-        if pending is not None:
-            rb = pa.RecordBatch.from_arrays(
-                [pa.concat_arrays([p, c])
-                 for p, c in zip(pending.columns, rb.columns)],
-                schema=rb.schema)
-            pending = None
-        m = rb.num_rows
-        if not m:
-            continue
-        change = np.zeros(m - 1, dtype=bool)
-        for c in group_cols:
-            v = rb.column(c).to_numpy(zero_copy_only=False)
-            change |= v[1:] != v[:-1]
-        boundaries = np.flatnonzero(change) + 1
-        starts = np.concatenate([[0], boundaries])
-        ends = np.concatenate([boundaries, [m]])
-        if len(starts) > 1:
-            yield emit(rb.slice(0, int(ends[-2])), starts[:-1], ends[:-1])
-        pending = rb.slice(int(starts[-1]))
-    if pending is not None and pending.num_rows:
-        yield emit(pending, np.array([0]), np.array([pending.num_rows]))
 
 
 def _uniform_map_props(props):
@@ -927,53 +754,78 @@ def _keep_features(flat, keep):
             (np.cumsum(keep) - 1)[ring_feat[rk]], first[rk])
 
 
-def encode_geom_tiles(features: DataFrame, geom_type: str,
-                      layer_name: str = "features", extent: int = 4096,
-                      extent_clamp: bool = False,
-                      n_partitions: int | None = None) -> DataFrame:
-    """Bulk non-point encode: same plan shape as encode_point_tiles — ONE
-    repartition on the tile key + sortWithinPartitions + a streaming
-    mapInArrow whose kernel (encode_geom_tiles_bulk) vectorizes
-    projection/winding/delta/varint across every tile in the Arrow batch.
+def encode_geojson_tiles(features: DataFrame, geom_type: str,
+                         layer_name: str = "features",
+                         extent: int = 4096,
+                         extent_clamp: bool = False,
+                         n_partitions: int | None = None) -> DataFrame:
+    """Generic-geometry encode: rows of (z, x, y, feature_id, coords, props)
+    -> one MVT layer per tile, byte-identical to the LayerEncoder
+    (WriteLayer, write_layer.go:127-175): LineString/Polygon/Multi* command
+    streams, winding enforcement and ring closure.
 
-    The boundary is Arrow end to end: flatten_geom_arrow reads the
-    geometry from the ``coords`` ListArray offsets and values buffer, and
-    the props come from the MapArray offsets/keys/items — no pandas frame
-    and no per-feature Python when the rows conform. The column's nesting
-    depth decides 3- vs 4-level MultiPolygon. A tile group holding a null
-    map, a null prop value, a null feature_id or a key set other than the
-    batch's (compared order-insensitively), or any batch whose coords do
-    not conform, is encoded by the scalar encode_layer oracle instead.
-    Bytes are identical either way (pinned by tests/test_encode_fast.py
-    and tests/test_geom_tiles.py).
+    ``coords`` is ``array<array<array<double>>>`` (Polygon rings / an array
+    of lines); for LineString and MultiPoint the geometry is ``coords[0]``,
+    for Point ``coords[0][0]``. MultiPolygon also accepts 4-level
+    ``array<array<array<array<double>>>>`` — [polygon][ring][pt][xy],
+    holes included; the column's nesting depth decides, not a per-row
+    probe. ``props`` is ``map<string,string>`` or a JSON object string
+    (str/int/float/bool values survive as the typed MVT Value variants).
+
+    Same plan shape as encode_point_tiles: ONE repartition on the tile key
+    + sortWithinPartitions + a streaming mapInArrow. Routing happens per
+    tile group inside it: MultiPoint/line/polygon rows with
+    ``map<string,string>`` props take the bulk encoder
+    (encode_geom_tiles_bulk), which vectorizes projection/winding/delta/
+    varint across every tile in the Arrow batch — geometry read by
+    flatten_geom_arrow from the ``coords`` ListArray offsets and values
+    buffer, props from the MapArray offsets/keys/items, no per-feature
+    Python. Every other tile group goes to the scalar encode_layer oracle:
+    Point shapes, JSON props, and groups holding a null map, a null prop
+    value, a null feature_id, a key set other than the batch's (compared
+    order-insensitively) or coords that do not conform. Bytes are
+    identical either way (pinned by tests/test_encode_fast.py and
+    tests/test_geom_tiles.py).
 
     This gives polygon-heavy workloads (building footprints, parcels —
     billions of rows) the same cost model as the point firehose instead of
     per-feature Python Cursor builders (reference equivalent:
     write_geometry.go:108-378, one cost model for every type)."""
+    import json
+
+    from pyspark.sql.types import MapType, StringType
+
     from ..codec.encode import encode_layer
     from ..codec.encode_fast import (_list_depth, encode_geom_tiles_bulk,
                                      flatten_geom_arrow)
 
-    df = features.select("z", "x", "y", "feature_id", "coords", "props")
-    if n_partitions is None:
-        n_partitions = df.sparkSession.sparkContext.defaultParallelism * 2
-    df = (df.repartition(n_partitions, "z", "x", "y")
-          .sortWithinPartitions("z", "x", "y", "feature_id"))
+    ptype = features.schema["props"].dataType
+    bulk = (geom_type in _BULK_GEOM_TYPES
+            and isinstance(ptype, MapType)
+            and isinstance(ptype.keyType, StringType)
+            and isinstance(ptype.valueType, StringType))
 
     def scalar_tile(sub) -> bytes:
         four_level = _list_depth(sub.column("coords").type) == 4
 
         def normalize(c):
+            if geom_type == "Point":
+                return c[0][0]
             if geom_type in ("LineString", "MultiPoint"):
                 return c[0]
             if geom_type == "MultiPolygon" and not four_level:
-                return [[ring] for ring in c]
+                return [[ring] for ring in c]   # one ring per polygon
             return c
 
+        def props(p):
+            if isinstance(p, str):
+                # JSON-typed properties: str/int/float/bool survive as the
+                # MVT Value variant types (codec/values.py write_value)
+                p = json.loads(p)
+            return dict(p) if p is not None else {}
+
         feats = [{"type": geom_type, "coordinates": normalize(c),
-                  "properties": dict(p) if p is not None else {},
-                  "id": int(f)}
+                  "properties": props(p), "id": int(f)}
                  for f, c, p in zip(sub.column("feature_id").to_pylist(),
                                     sub.column("coords").to_pylist(),
                                     sub.column("props").to_pylist())]
@@ -982,18 +834,19 @@ def encode_geom_tiles(features: DataFrame, geom_type: str,
                             extent_clamp=extent_clamp)
 
     def emit(rb, starts, ends):
-        zs, xs, ys = (rb.column(c).to_numpy(zero_copy_only=False)
-                      for c in ("z", "x", "y"))
-        fid_col = rb.column("feature_id")
-        row_ok, keynames, vals = _uniform_map_props(rb.column("props"))
-        flat = flatten_geom_arrow(geom_type, rb.column("coords"))
-        if flat is None:
-            row_ok[:] = False
-        if fid_col.null_count:
-            row_ok &= ~fid_col.is_null().to_numpy(zero_copy_only=False)
+        zs, xs, ys = _col(rb, "z"), _col(rb, "x"), _col(rb, "y")
         lens = ends - starts
-        tile_ok = np.logical_and.reduceat(row_ok, starts)
+        tile_ok = np.zeros(len(starts), bool)
         bufs = [None] * len(starts)
+        if bulk:
+            fid_col = rb.column("feature_id")
+            row_ok, keynames, vals = _uniform_map_props(rb.column("props"))
+            flat = flatten_geom_arrow(geom_type, rb.column("coords"))
+            if flat is None:
+                row_ok[:] = False
+            if fid_col.null_count:
+                row_ok &= ~fid_col.is_null().to_numpy(zero_copy_only=False)
+            tile_ok = np.logical_and.reduceat(row_ok, starts)
         if tile_ok.any():
             keep = np.repeat(tile_ok, lens)
             if not keep.all():
@@ -1013,85 +866,8 @@ def encode_geom_tiles(features: DataFrame, geom_type: str,
         return _tile_batch(zs[starts], xs[starts], ys[starts], layer_name,
                            bufs, lens)
 
-    def run(batches):
-        return _stream_sorted_arrow_groups(batches, emit)
-
-    return df.mapInArrow(run, TILE_SCHEMA)
-
-
-def encode_geojson_tiles(features: DataFrame, geom_type: str,
-                         layer_name: str = "features",
-                         extent: int = 4096,
-                         extent_clamp: bool = False) -> DataFrame:
-    """Generic-geometry encode: rows of (z, x, y, feature_id, coords, props)
-    -> one MVT layer per tile, byte-identical to the LayerEncoder
-    (WriteLayer, write_layer.go:127-175): LineString/Polygon/Multi* command
-    streams, winding enforcement and ring closure.
-
-    ``coords`` is ``array<array<array<double>>>`` (Polygon rings / an array
-    of lines); for LineString the single line is ``coords[0]``. MultiPolygon
-    also accepts 4-level ``array<array<array<array<double>>>>`` —
-    [polygon][ring][pt][xy], holes included.
-
-    Routing: MultiPoint/line/polygon shapes with ``map<string,string>``
-    props always take the Arrow-native bulk encoder (encode_geom_tiles,
-    mapInArrow). Point shapes and JSON-string props (typed MVT values) take
-    a grouped ``applyInPandas`` over the scalar LayerEncoder, where the
-    MultiPolygon nesting is probed per row."""
-    import json
-
-    from pyspark.sql.types import MapType, StringType
-
-    from ..codec.encode import encode_layer
-
-    ptype = features.schema["props"].dataType
-    if (geom_type in _BULK_GEOM_TYPES
-            and isinstance(ptype, MapType)
-            and isinstance(ptype.keyType, StringType)
-            and isinstance(ptype.valueType, StringType)):
-        return encode_geom_tiles(features, geom_type, layer_name, extent,
-                                 extent_clamp)
-
-    def encode_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("feature_id")
-        z, x, y = int(pdf["z"].iloc[0]), int(pdf["x"].iloc[0]), int(pdf["y"].iloc[0])
-        feats = []
-        for fid, coords, props in zip(pdf["feature_id"], pdf["coords"],
-                                      pdf["props"]):
-            if geom_type == "MultiPolygon" and _is_4level(coords):
-                # 4-level input (array<array<array<array<double>>>>):
-                # polygons WITH interior rings pass straight through to
-                # make_multipolygon (encode.py:190), which already winds
-                # exteriors/holes correctly — closes VERDICT r4 missing #2.
-                c = [[[list(map(float, p)) for p in ring] for ring in poly]
-                     for poly in coords]
-            else:
-                c = [[list(map(float, p)) for p in ring] for ring in coords]
-                if geom_type == "LineString":
-                    c = c[0]
-                elif geom_type == "MultiPoint":
-                    c = c[0]
-                elif geom_type == "Point":
-                    c = c[0][0]
-                elif geom_type == "MultiPolygon":
-                    # 3-level back-compat mapping: one ring per polygon
-                    c = [[ring] for ring in c]
-            if isinstance(props, str):
-                # JSON-typed properties: str/int/float/bool survive as the
-                # MVT Value variant types (codec/values.py write_value)
-                props = json.loads(props)
-            feats.append({"type": geom_type, "coordinates": c,
-                          "properties": dict(props) if props is not None else {},
-                          "id": int(fid)})
-        buf = encode_layer(feats, z, x, y, layer_name, extent=extent,
-                           extent_clamp=extent_clamp)
-        return pd.DataFrame([(z, x, y, layer_name, buf, len(feats))],
-                            columns=["z", "x", "y", "layer", "tile_pbf",
-                                     "n_features"])
-
-    return (features.select("z", "x", "y", "feature_id", "coords", "props")
-            .groupBy("z", "x", "y")
-            .applyInPandas(encode_group, TILE_SCHEMA))
+    df = features.select("z", "x", "y", "feature_id", "coords", "props")
+    return _encode_plan(df, emit, TILE_SCHEMA, ("feature_id",), n_partitions)
 
 
 def decode_tile_vertices(tiles: DataFrame, scale_dim: float | None = None) -> DataFrame:
