@@ -7,7 +7,8 @@
    vectorized path and the per-feature walk.
 3. Feature ids >= 2^63 (legal uint64 on the wire; produced by the encoder's
    ``fid & 0xFFFFFFFFFFFFFFFF`` on negative ids) decode identically on both
-   paths: the bulk path must fall back rather than wrap negative.
+   paths: the feature-table kernel hands the tile to the walk rather than
+   wrap the id negative.
 4. Corrupt oversized varints in small geometries wrap mod 2^32 exactly like
    the >=256-byte numpy path (no OverflowError divergence).
 """
@@ -18,8 +19,8 @@ from pathlib import Path
 import numpy as np
 
 from vector_tile_go_spark import tilemath as tm
-from vector_tile_go_spark.codec.decode import (bulk_point_layer, decode_tile,
-                                               parse_tile)
+from vector_tile_go_spark.codec.decode import (bulk_feature_table, decode_tile,
+                                               feature_table, parse_tile)
 from vector_tile_go_spark.codec.encode import encode_layer
 
 PKG = Path(__file__).resolve().parent.parent / "vector_tile_go_spark"
@@ -45,10 +46,11 @@ def test_huge_feature_id_bulk_fallback():
     feats = [{"id": -1, "type": "Point", "coordinates": _mid(z, x, y),
               "properties": {"url": "a", "mention_idx": "0"}}]
     buf = encode_layer(feats, z, x, y, "geo", extent_clamp=True)
-    lf = parse_tile(buf)[0]
-    # wire id is 2^64-1: the int64 bulk cast would wrap it negative, so the
-    # bulk path must decline and the walk must yield the positive uint64
-    assert bulk_point_layer(lf) is None
+    # wire id is 2^64-1: the kernel's int64 scan would wrap it negative, so
+    # it hands the tile back and the walk yields the positive uint64
+    _, handled = bulk_feature_table([buf])
+    assert handled.tolist() == [False]
+    assert feature_table([buf])["feature_id"].tolist() == [2**64 - 1]
     (name, f), = decode_tile(buf, z, x, y, mode="int")
     assert f.feature_id == 2**64 - 1
 
@@ -59,11 +61,9 @@ def test_bulk_path_still_fires_for_normal_ids():
               "properties": {"url": f"u{i}", "mention_idx": "0"}}
              for i in range(4)]
     buf = encode_layer(feats, z, x, y, "geo", extent_clamp=True)
-    lf = parse_tile(buf)[0]
-    bulk = bulk_point_layer(lf)
-    assert bulk is not None
-    ids = bulk[0]
-    assert ids.tolist() == [1, 2, 3, 4]
+    table, handled = bulk_feature_table([buf])
+    assert handled.tolist() == [True]
+    assert table["feature_id"].tolist() == [1, 2, 3, 4]
 
 
 def test_small_geometry_corrupt_varint_wraps():

@@ -79,9 +79,10 @@ def test_decode_foreign_field_order():
     """Foreign encoders may emit feature/layer fields in any protobuf
     order (geometry before tags, id last, extent before name). The walk
     decoder must produce identical features to the canonical layout —
-    and the bulk fast path must decline, not mis-parse."""
-    from vector_tile_go_spark.codec.decode import (bulk_point_layer,
-                                                   decode_tile, parse_tile)
+    and so must the feature-table kernel, without the walk."""
+    from vector_tile_go_spark.codec.decode import (bulk_feature_table,
+                                                   decode_tile,
+                                                   feature_table_walk)
     from vector_tile_go_spark.codec.wire import encode_varint
 
     # canonical: id, tags, type, geometry
@@ -113,6 +114,13 @@ def test_decode_foreign_field_order():
                      int(f.xs[0]), int(f.ys[0])))
     assert all(o == (7, {"k": "v"}, 4, 1) for o in outs), outs
 
-    # bulk path: canonical layout qualifies, foreign layout falls back
-    assert bulk_point_layer(parse_tile(layer(canon_feat, True))[0]) is not None
-    assert bulk_point_layer(parse_tile(layer(foreign_feat, True))[0]) is None
+    # the lock-step scan takes both layouts, and both equal the walk
+    bufs = [layer(canon_feat, True), layer(foreign_feat, True)]
+    table, handled = bulk_feature_table(bufs)
+    assert handled.all()
+    walk = feature_table_walk(bufs)
+    for k in ("tile", "feature_id", "geojson_type", "ix", "iy"):
+        assert table[k].tolist() == walk[k].tolist(), k
+    for t in (table, walk):
+        assert [(t["keys"][k], t["values"][v]) for k, v in
+                zip(t["tag_key"], t["tag_val"])] == [("k", "v")] * 2

@@ -73,7 +73,6 @@ def test_bulk_tile_stats_kernel_edges():
     import numpy as np
 
     from vector_tile_go_spark.codec.decode import (bulk_point_tile_stats,
-                                                   bulk_point_layer,
                                                    decode_feature,
                                                    parse_tile)
     from vector_tile_go_spark.codec.encode import encode_layer
@@ -123,7 +122,7 @@ def test_bulk_tile_stats_kernel_edges():
     assert handled[0] and ns[0] == 5 and nvs[0] == 3
     assert handled[1] and ns[1] == 1 and nvs[1] == 1
     # propless features omit the tags field (11 varints/feature, not 13):
-    # not the uniform layout — falls back like bulk_point_layer does
+    # not the uniform layout — falls back to the per-tile walk
     assert not handled[2]
     assert not handled[4]  # multi-frame tile falls back
     assert not handled[5]  # corrupt tile falls back

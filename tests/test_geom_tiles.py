@@ -130,6 +130,77 @@ def test_decode_quarantine_corrupt_tiles(spark):
     assert len(bad) == 1 and bad.iloc[0]["x"] == 1
 
 
+def test_decode_error_contract_names_the_tile(spark):
+    """One error contract at all six decode entry points: the corrupt tile
+    at (0, 1, 0) fails the job with z=0 x=1 y=0 in the message, and under
+    quarantine decode_tiles yields exactly one error row for it."""
+    import pytest
+
+    from vector_tile_go_spark.codec.encode import encode_layer
+    from vector_tile_go_spark.sparkops import udfs
+    good = encode_layer([{"type": "Point", "coordinates": [1.0, 1.0],
+                          "properties": {"k": "v"}, "id": 7}], 0, 0, 0, "t")
+    tiles = spark.createDataFrame(
+        [(0, 0, 0, good), (0, 1, 0, b"\x1a\x05\x0a\x84")],
+        "z int, x bigint, y bigint, tile_pbf binary")
+    entry_points = {
+        "decode_tiles": udfs.decode_tiles(tiles),
+        "decode_tile_stats": udfs.decode_tile_stats(tiles, distinct_prop="k"),
+        "decode_tile_point_agg": udfs.decode_tile_point_agg(
+            tiles, lambda z, x, y, px, py, ext: (len(px),), "n bigint"),
+        "decode_tile_vertices": udfs.decode_tile_vertices(tiles),
+        "decode_tile_props_typed": udfs.decode_tile_props_typed(
+            tiles, {"k": "string"}),
+        "tile_stats": udfs.tile_stats(tiles),
+    }
+    for name, df in entry_points.items():
+        with pytest.raises(Exception) as err:
+            df.collect()
+        assert "z=0 x=1 y=0" in str(err.value), name
+    out = udfs.decode_tiles(tiles, mode="props", quarantine=True).collect()
+    assert [(r["x"], r["feature_id"]) for r in out if r["error"] is None] \
+        == [(0, 7)]
+    assert [(r["z"], r["x"], r["y"]) for r in out if r["error"]] == [(0, 1, 0)]
+    # an id of 2^63 or more (the encoder writes id -1 as 2^64-1) decodes,
+    # but does not fit the bigint feature_id: that tile's error, by name
+    huge = encode_layer([{"type": "Point", "coordinates": [1.0, 1.0],
+                          "properties": {"k": "v"}, "id": -1}], 0, 2, 0, "t")
+    tiles = spark.createDataFrame(
+        [(0, 0, 0, good), (0, 2, 0, huge)],
+        "z int, x bigint, y bigint, tile_pbf binary")
+    for name, df in {
+            "decode_tiles": udfs.decode_tiles(tiles),
+            "decode_tile_vertices": udfs.decode_tile_vertices(tiles),
+            "decode_tile_props_typed": udfs.decode_tile_props_typed(
+                tiles, {"k": "string"})}.items():
+        with pytest.raises(Exception) as err:
+            df.collect()
+        assert "z=0 x=2 y=0" in str(err.value), name
+        assert "18446744073709551615" in str(err.value), name
+    out = udfs.decode_tiles(tiles, quarantine=True).collect()
+    assert [(r["x"], r["feature_id"], r["error"] is None) for r in out] \
+        == [(0, 7, True), (2, None, False)]
+
+
+def test_multipoint_duplicate_points_through_decode(spark):
+    """A bulk-encoded MultiPoint whose MoveTo count outlived its dropped
+    zero-delta duplicates decodes at the entry points as in the walk."""
+    from vector_tile_go_spark.codec.decode import decode_tile
+    from vector_tile_go_spark.sparkops import udfs
+    pts = [[10.0, 10.0], [10.0, 10.0], [20.0, 15.0], [20.0, 15.0]]
+    tiles = encode_geojson_tiles(_mk_df(spark, [(0, 0, 0, 5, [pts], {})]),
+                                 "MultiPoint", layer_name="mp")
+    (_, f), = decode_tile(tiles.first()["tile_pbf"], mode="int")
+    assert len(f.xs) == 2   # under a count-4 MoveTo header
+    (r,) = udfs.decode_tiles(tiles, mode="int").collect()
+    assert (r["geojson_type"], r["lng"], r["lat"]) == \
+        (f.geojson_type, f.xs[0], f.ys[0])
+    (a,) = udfs.decode_tile_point_agg(
+        tiles, lambda z, x, y, px, py, ext: (len(px), float(px[0])),
+        "n bigint, px0 double").collect()
+    assert (a["n"], a["px0"]) == (1, f.xs[0])
+
+
 def test_bulk_geom_stream_multi_tile_batches(spark):
     """Regression (round 5): the bulk stream's mid-batch emit must trim
     trailing pending rows — with few partitions a single Arrow batch
@@ -341,3 +412,50 @@ def test_tile_stats_skips_null_tiles(spark):
     out = tile_stats(df).collect()
     assert [(r["x"], r["layer"], r["n_features"]) for r in out] == \
         [(0, "t", 1)]
+
+
+def test_decode_chunks_dense_and_sparse_tiles(spark):
+    """Each Arrow batch is projected in chunks (udfs._chunks): a tile over
+    the 256 KB chunk budget goes alone, small tiles share a chunk, and the
+    entry points yield the walk's rows whatever the split — dense tiles
+    included, which take decode_tile_stats' feature-table route."""
+    import pyarrow as pa
+
+    from vector_tile_go_spark import tilemath as tm
+    from vector_tile_go_spark.codec.decode import decode_tile
+    from vector_tile_go_spark.codec.encode import encode_layer
+    from vector_tile_go_spark.sparkops import udfs
+    rng = np.random.default_rng(3)
+
+    def tile(x, n):
+        w, s, e, nn = tm.tile_bounds(8, x, 100)
+        return encode_layer(
+            [{"type": "Point", "id": i + 1,
+              "coordinates": [w + rng.random() * (e - w),
+                              s + rng.random() * (nn - s)],
+              "properties": {"url": f"u{i % 50}", "pad": f"{i:0100d}"}}
+             for i in range(n)], 8, x, 100, "geo")
+
+    rows = [(8, x, 100, tile(x, n))
+            for x, n in enumerate((1, 2, 1, 3000, 3000, 100, 1))]
+    rb = pa.RecordBatch.from_arrays(
+        [pa.array([r[3] for r in rows], pa.binary())], names=["tile_pbf"])
+    sizes = [[len(b) for b in c.column(0).to_pylist()]
+             for c in udfs._chunks(rb)]
+    assert [len(s) for s in sizes] == [3, 1, 1, 2]
+    assert all(len(s) == 1 or sum(s) <= udfs._DECODE_BYTES for s in sizes)
+    tiles = spark.createDataFrame(
+        rows, "z int, x bigint, y bigint, tile_pbf binary").coalesce(1)
+    walk = {x: [f for _, f in decode_tile(b, mode="int")]
+            for _, x, _, b in rows}
+    got = udfs.decode_tiles(tiles, mode="int").collect()
+    assert sorted((r["x"], r["feature_id"], r["lng"], r["lat"])
+                  for r in got) == sorted(
+        (x, f.feature_id, f.xs[0], f.ys[0]) for x, fs in walk.items()
+        for f in fs)
+    stats = udfs.decode_tile_stats(tiles).collect()
+    assert sorted((r["x"], r["n_features"], r["n_urls"]) for r in stats) == [
+        (x, len(fs), len({f.properties["url"] for f in fs}))
+        for x, fs in sorted(walk.items())]
+    assert udfs.decode_tile_vertices(tiles).count() == \
+        sum(len(fs) for fs in walk.values())

@@ -4,7 +4,8 @@
 - Python appears only at the codec/kernel boundary: every Python node is
   Arrow-batched (MapInArrow / MapInPandas / FlatMapGroupsInPandas /
   ArrowEvalPython) — never a row-at-a-time BatchEvalPython.
-- Every encoder crosses as MapInArrow, never as a pandas map node.
+- Every encoder and every decoder crosses as MapInArrow, never as a
+  pandas map node.
 
 Queries whose *construction* triggers driver actions (the escalating kNN
 rounds, streaming runs, stateful ops) are exercised by their own tests and
@@ -82,6 +83,32 @@ def test_encoders_cross_one_arrow_boundary(spark, sf_dir):
         "encode_geobuf_tiles": gb,
         "transcode_geobuf_tiles": transcode_geobuf_tiles(
             spark.createDataFrame(gb.collect(), gb.schema)),
+    }
+    for name, df in plans.items():
+        assert df.count() > 0, name
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "MapInArrow" in plan, (name, plan)
+        assert not [n for n in PANDAS_MAP if n in plan], (name, plan)
+
+
+def test_decoders_cross_one_arrow_boundary(spark):
+    """Every decode entry point is one mapInArrow over the feature table:
+    its physical plan holds the Arrow map node and no pandas map node."""
+    from vector_tile_go_spark.codec.encode import encode_layer
+    from vector_tile_go_spark.sparkops import udfs
+    good = encode_layer([{"type": "Point", "coordinates": [1.0, 1.0],
+                          "properties": {"k": "v"}, "id": 7}], 0, 0, 0, "t")
+    tiles = spark.createDataFrame(
+        [(0, 0, 0, good)], "z int, x bigint, y bigint, tile_pbf binary")
+    plans = {
+        "decode_tiles": udfs.decode_tiles(tiles),
+        "decode_tile_stats": udfs.decode_tile_stats(tiles, distinct_prop="k"),
+        "decode_tile_point_agg": udfs.decode_tile_point_agg(
+            tiles, lambda z, x, y, px, py, ext: (len(px),), "n bigint"),
+        "decode_tile_vertices": udfs.decode_tile_vertices(tiles),
+        "decode_tile_props_typed": udfs.decode_tile_props_typed(
+            tiles, {"k": "string"}),
+        "tile_stats": udfs.tile_stats(tiles),
     }
     for name, df in plans.items():
         assert df.count() > 0, name

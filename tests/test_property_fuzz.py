@@ -172,15 +172,15 @@ def test_splice_append_equals_reencode_fuzz(old, new):
 
 
 # ---------------------------------------------------------------------------
-# columnar vertex-decode kernel vs the per-feature decode_tile walk
+# the columnar feature-table kernel vs the per-feature decode_tile walk
 # ---------------------------------------------------------------------------
 
 import math  # noqa: E402
 
 from vector_tile_go_spark import tilemath as tm  # noqa: E402
 from vector_tile_go_spark.codec.decode import (  # noqa: E402
-    GEOJSON_TYPES, bulk_decode_vertices, decode_vertex_rows,
-    decode_vertices_walk, round_half_away)
+    GEOJSON_TYPES, bulk_feature_table, feature_table, feature_table_walk,
+    round_half_away, vertex_rows)
 from vector_tile_go_spark.codec.wire import encode_varint  # noqa: E402
 
 _TZ, _TX, _TY = 3, 4, 3
@@ -230,7 +230,8 @@ def _encode_tile(layers):
                     for name, feats in layers)
 
 
-def _rows(cols):
+def _rows(table):
+    cols = vertex_rows(table)
     names = cols["layer_names"]
     return [(int(t), names[lay], int(f) if ok else None, GEOJSON_TYPES[g],
              int(r), int(p), int(x), int(y))
@@ -286,12 +287,12 @@ def test_vertex_kernel_matches_walk_on_encoder_tiles(bufs, dim):
     """Every tile the scalar encoder emits — all six geometry types, holes,
     id 0 / absent, multi-layer, empty and null tiles — is handled by the
     columnar kernel and decodes to the walk's rows, row for row."""
-    cols, handled = bulk_decode_vertices(bufs)
+    table, handled = bulk_feature_table(bufs)
     assert handled.all()
-    assert _rows(cols) == _rows(decode_vertices_walk(bufs))
+    assert _rows(table) == _rows(feature_table_walk(bufs))
     want = [int(math.copysign(math.floor(abs(v / dim) + 0.5), v))
-            for v in cols["ix"].tolist()]
-    assert round_half_away(cols["ix"], dim).tolist() == want
+            for v in table["ix"].tolist()]
+    assert round_half_away(table["ix"], dim).tolist() == want
 
 
 def test_vertex_kernel_handles_bulk_encoder_tiles():
@@ -323,9 +324,9 @@ def test_vertex_kernel_handles_bulk_encoder_tiles():
         flat = flatten_geom_rows(gt, rows)
         bufs += encode_geom_tiles_bulk(np.full(n, _TZ), x, y, ids, props,
                                        starts, ends, "g", gt, *flat)[0]
-    cols, handled = bulk_decode_vertices(bufs)
+    table, handled = bulk_feature_table(bufs)
     assert handled.all()
-    assert _rows(cols) == _rows(decode_vertices_walk(bufs))
+    assert _rows(table) == _rows(feature_table_walk(bufs))
 
 
 @settings(max_examples=120, deadline=None)
@@ -355,9 +356,9 @@ def test_vertex_kernel_foreign_field_order(feats, n_layers):
         geom = b"".join(encode_varint(v) for v in ints)
         bodies.append(_raw_feature(fid, gtype, geom, order))
     tile = b"".join(_raw_layer(f"l{i}", bodies) for i in range(n_layers))
-    cols, handled = bulk_decode_vertices([tile])
+    table, handled = bulk_feature_table([tile])
     assert handled.all()
-    assert _rows(cols) == _rows(decode_vertices_walk([tile]))
+    assert _rows(table) == _rows(feature_table_walk([tile]))
 
 
 def _pad(v, width):
@@ -377,10 +378,9 @@ def test_vertex_kernel_wide_command_ints_fall_back():
             + encode_varint(_zz(5)) + encode_varint(_zz(6))
             + _pad(_zz(7), 6) + encode_varint(2))
     tile = _raw_layer("w", [_raw_feature(1, 2, geom, (0, 1, 2, 3))])
-    cols, handled = bulk_decode_vertices([tile, tile[:0]])
+    _, handled = bulk_feature_table([tile, tile[:0]])
     assert handled.tolist() == [False, True]
-    assert _rows(decode_vertex_rows([tile])) == \
-        _rows(decode_vertices_walk([tile]))
+    assert _rows(feature_table([tile])) == _rows(feature_table_walk([tile]))
 
 
 _MUTATIONS = ("truncated_varint", "count_past_end", "unknown_command",
@@ -388,18 +388,8 @@ _MUTATIONS = ("truncated_varint", "count_past_end", "unknown_command",
               "truncate", "flip")
 
 
-@settings(max_examples=120, deadline=None)
-@given(st.sampled_from(_MUTATIONS), st.integers(1, 3),
-       st.lists(st.tuples(st.integers(-300, 300), st.integers(-300, 300)),
-                min_size=1, max_size=6),
-       st.integers(0, 10**6), st.integers(1, 255))
-def test_vertex_kernel_mutated_tiles_match_walk(kind, gtype, pts, pick, xor):
-    """Malformed or quirky tiles give the walk's rows or the walk's
-    exception: a truncated trailing varint, a command count past the end
-    of the stream, an unknown command, non-minimal varints, a MultiPoint
-    header whose count outlived dropped duplicates (the bulk encoder's
-    write_geometry.go:338-344 quirk), an id >= 2^63, and random
-    truncations/byte flips."""
+def _mutated_tile(kind, gtype, pts, pick, xor):
+    """A two-feature tile with mutation ``kind`` applied (see _MUTATIONS)."""
     if kind == "multipoint_header_kept":
         gtype = 1
     ints = [_cmd(1, len(pts) if gtype == 1 else 1)]
@@ -433,5 +423,193 @@ def test_vertex_kernel_mutated_tiles_match_walk(kind, gtype, pts, pick, xor):
         b = bytearray(tile)
         b[pick % len(b)] ^= xor
         tile = bytes(b)
-    assert (_outcome(decode_vertex_rows, [tile])
-            == _outcome(decode_vertices_walk, [tile]))
+    return tile
+
+
+_mutation = st.builds(
+    _mutated_tile, st.sampled_from(_MUTATIONS), st.integers(1, 3),
+    st.lists(st.tuples(st.integers(-300, 300), st.integers(-300, 300)),
+             min_size=1, max_size=6),
+    st.integers(0, 10**6), st.integers(1, 255))
+
+
+@settings(max_examples=120, deadline=None)
+@given(_mutation)
+def test_vertex_kernel_mutated_tiles_match_walk(tile):
+    """Malformed or quirky tiles give the walk's rows or the walk's
+    exception: a truncated trailing varint, a command count past the end
+    of the stream, an unknown command, non-minimal varints, a MultiPoint
+    header whose count outlived dropped duplicates (the bulk encoder's
+    write_geometry.go:338-344 quirk), an id >= 2^63, and random
+    truncations/byte flips."""
+    assert (_outcome(feature_table, [tile])
+            == _outcome(feature_table_walk, [tile]))
+
+
+# ---------------------------------------------------------------------------
+# whole feature rows of the table (every decode entry point projects it)
+# against decode_tile, in every mode
+# ---------------------------------------------------------------------------
+
+import struct  # noqa: E402
+
+from vector_tile_go_spark.codec.decode import first_vertex  # noqa: E402
+
+_MODES = ("props", "int", "lnglat")
+
+
+def _value(v):
+    return type(v).__name__, repr(v)
+
+
+def _table_rows(bufs, mode, layers=None):
+    """feature_table's whole feature rows, and the tiles it quarantined."""
+    errors = []
+    t = feature_table(bufs, mode, layers, errors)
+    fx, fy = first_vertex(t)
+    if mode == "lnglat":
+        fx, fy = tm.project_tile_to_lnglat(fx, fy, _TZ, _TX, _TY, t["extent"])
+    off = np.concatenate([[0], np.cumsum(t["n_tags"])]).tolist()
+    rows = []
+    for i in range(len(t["tile"])):
+        has = not math.isnan(fx[i])
+        rows.append((
+            int(t["tile"][i]), t["layer_names"][t["layer"][i]],
+            int(t["feature_id"][i]) or None, int(t["geom_type"][i]),
+            GEOJSON_TYPES[t["geojson_type"][i]],
+            float(fx[i]) if has else None, float(fy[i]) if has else None,
+            [(t["keys"][t["tag_key"][j]], _value(t["values"][t["tag_val"][j]]))
+             for j in range(off[i], off[i + 1])]))
+    return rows, sorted(tile for tile, _ in errors)
+
+
+def _walk_rows(bufs, mode, layers=None):
+    """The same rows straight from decode_tile, tile by tile."""
+    rows, errors = [], []
+    for t, b in enumerate(bufs):
+        if b is None:
+            continue
+        try:
+            feats = decode_tile(bytes(b), _TZ, _TX, _TY, mode, layers)
+        except Exception:  # noqa: BLE001 — compared, not swallowed
+            errors.append(t)
+            continue
+        for name, f in feats:
+            has = len(f.xs) > 0
+            rows.append((t, name, f.feature_id, f.geom_type, f.geojson_type,
+                         float(f.xs[0]) if has else None,
+                         float(f.ys[0]) if has else None,
+                         [(k, _value(v)) for k, v in f.properties.items()]))
+    return rows, errors
+
+
+# the encoder's six Value variants: string, float32, double, int64
+# (negatives wrap through uint64), uint64, bool
+_typed_value = st.one_of(
+    st.text(max_size=6), st.booleans(), st.integers(-2**63, 2**63 - 1),
+    st.integers(0, 2**64 - 1).map(np.uint64),
+    st.floats(width=32).map(np.float32), st.floats())
+_typed_feature = st.builds(
+    lambda g, fid, p: {"type": g[0], "coordinates": g[1], "id": fid,
+                       "properties": p},
+    _geometry, st.one_of(st.none(), st.integers(1, 2**63 - 1)),
+    st.dictionaries(st.sampled_from(["a", "b", "c", "d"]), _typed_value,
+                    max_size=4))
+
+
+@settings(max_examples=80, deadline=None)
+@given(st.lists(st.one_of(
+           st.none(), st.just(b""),
+           st.lists(st.tuples(st.sampled_from(["l0", "l1"]),
+                              st.lists(_typed_feature, max_size=5)),
+                    min_size=1, max_size=3).map(_encode_tile)),
+           min_size=1, max_size=4),
+       st.sampled_from(_MODES), st.sampled_from([None, ["l0"]]))
+def test_feature_table_matches_walk_on_encoder_tiles(bufs, mode, layers):
+    """Encoder tiles with typed properties, one or two layers (filtered
+    or not), empty and null tiles: the kernel takes every tile, and each
+    whole feature row — tile, layer, id, geom type, geojson type, first
+    vertex, property list with Python types — equals decode_tile's."""
+    _, handled = bulk_feature_table(bufs, mode, layers)
+    assert handled.all()
+    assert _table_rows(bufs, mode, layers) == _walk_rows(bufs, mode, layers)
+
+
+# every Value variant on the wire (read_layer.go:97-114), sint64 included
+_VALUES = (_field(1, 2, b"s"), b"\x15" + struct.pack("<f", 1.5),
+           b"\x19" + struct.pack("<d", -2.25), _field(4, 0, 2**64 - 3),
+           _field(5, 0, 7), _field(6, 0, 9), _field(7, 0, 1))
+
+
+def _typed_layer(feature_bodies):
+    """A layer whose key dictionary repeats "a" (ids 0 and 2)."""
+    body = (_field(1, 2, b"f")
+            + b"".join(_field(2, 2, f) for f in feature_bodies)
+            + b"".join(_field(3, 2, k) for k in (b"a", b"b", b"a"))
+            + b"".join(_field(4, 2, v) for v in _VALUES))
+    return _field(3, 2, body)
+
+
+def _tagged_feature(fid, gtype, tags, order):
+    geom = b"".join(encode_varint(v) for v in (_cmd(1, 1), _zz(3), _zz(4)))
+    fields = [_field(1, 0, fid),
+              _field(2, 2, b"".join(encode_varint(t) for t in tags)),
+              _field(3, 0, gtype), _field(4, 2, geom)]
+    return b"".join(fields[i] for i in order)
+
+
+@settings(max_examples=120, deadline=None)
+@given(st.lists(st.tuples(st.integers(0, 2**40), st.integers(0, 4),
+                          st.lists(st.integers(0, 9), max_size=9),
+                          st.permutations(range(4))),
+                min_size=1, max_size=5),
+       st.sampled_from(_MODES))
+def test_feature_table_foreign_tags(feats, mode):
+    """Foreign tags in any field order: all seven Value variants, odd tag
+    counts, out-of-range ids (which read ""), and keys repeated by id or
+    by string — the walk's dict keeps the last value, so those tiles go
+    to the walk."""
+    tile = _typed_layer([_tagged_feature(*f) for f in feats])
+    assert _table_rows([tile], mode) == _walk_rows([tile], mode)
+
+
+def test_feature_table_repeated_key_takes_the_walk():
+    tile = _typed_layer([_tagged_feature(1, 1, [0, 0, 0, 1], range(4)),
+                         _tagged_feature(2, 1, [0, 0, 2, 1], range(4))])
+    _, handled = bulk_feature_table([tile], "props")
+    assert handled.tolist() == [False]
+    rows, errors = _table_rows([tile], "props")
+    assert (rows, errors) == _walk_rows([tile], "props")
+    assert [r[-1] for r in rows] == [[("a", _value(np.float32(1.5)))]] * 2
+
+
+@settings(max_examples=120, deadline=None)
+@given(_mutation, st.sampled_from(_MODES))
+def test_feature_table_mutated_tiles_match_walk(tile, mode):
+    """The mutated tiles of the vertex fuzz, in every mode: the table
+    holds the walk's rows, and a tile the walk raises on is an error
+    entry with no rows, next to a null tile and a good copy."""
+    bufs = [tile, None, _raw_layer("ok", [_raw_feature(3, 1, b"\x09\x02\x02",
+                                                       range(4))])]
+    assert _table_rows(bufs, mode) == _walk_rows(bufs, mode)
+
+
+def test_multipoint_duplicate_points_decode_like_the_walk():
+    """The bulk encoder keeps a MultiPoint's MoveTo count at the original
+    point count while it drops zero-delta duplicates (MakeMultiPointFloat,
+    write_geometry.go:338-344), so the header claims more points than the
+    stream holds. The table — and with it the first-vertex projections
+    decode_tiles and decode_tile_point_agg — reads it as the walk does."""
+    from vector_tile_go_spark.codec.encode_fast import (
+        encode_geom_tiles_bulk, flatten_geom_rows)
+    pts = _pts([(10, 10), (10, 10), (50, 20), (50, 20)])
+    bufs, _ = encode_geom_tiles_bulk(
+        np.full(1, _TZ), np.array([_TX]), np.array([_TY]), np.array([5]),
+        {"k": np.array(["v"], object)}, np.array([0]), np.array([1]), "mp",
+        "MultiPoint", *flatten_geom_rows("MultiPoint", [pts]))
+    (_, f), = decode_tile(bufs[0], mode="int")
+    assert len(f.xs) == 2   # a count-4 MoveTo header over two pairs
+    for mode in _MODES:
+        _, handled = bulk_feature_table(bufs, mode)
+        assert handled.all()
+        assert _table_rows(bufs, mode) == _walk_rows(bufs, mode)

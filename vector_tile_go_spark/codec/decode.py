@@ -600,57 +600,6 @@ def _assemble_polygons_perring(feat: DecodedFeature):
     feat.geojson_type = "Polygon" if len(groups) == 1 else "MultiPolygon"
 
 
-def bulk_point_layer(lf: LayerFrame):
-    """Vectorized decode of a UNIFORM point layer: every feature shaped
-    [frame, len, 0x08, id, 0x12, tlen, 2P tag ints, 0x18, 1, 0x22, glen,
-    MoveTo(1), zzx, zzy] — the layout our encoder emits and the MVT spec's
-    recommended field order. The whole features region is then a pure varint
-    stream (no strings inside feature bodies), so ONE boundary scan + ONE
-    add.reduceat decodes every field of every feature; structure checks are
-    vectorized column tests on the reshaped value matrix.
-
-    Returns (ids, key_idx: (n,P), val_idx: (n,P), px, py) int64 arrays, or
-    None when the layer doesn't conform (caller falls back to the
-    per-feature walk). ~20x faster than decode_feature per feature."""
-    spans = lf.feature_frame_spans
-    m = len(spans)
-    if m == 0 or len(lf.feature_spans) != m:
-        return None
-    first, last = spans[0][0], spans[-1][1]
-    for i in range(m - 1):  # frames must be adjacent (contiguous region)
-        if spans[i][1] != spans[i + 1][0]:
-            return None
-    raw = np.frombuffer(lf.buf, np.uint8, last - first, first)
-    vals = varint_decode_all(raw)
-    if len(vals) % m:
-        return None
-    per = len(vals) // m
-    p2 = per - 13  # 2 ints per property
-    if p2 < 0 or p2 % 2:
-        return None
-    n_props = p2 // 2
-    Vu = vals.reshape(m, per)
-    # feature ids >= 2^63 are legal on the wire (uint64); the int64 cast
-    # below would wrap them negative while decode_feature keeps them
-    # positive — fall back to the walk for such layers
-    if bool((Vu[:, 3] >= np.uint64(1) << np.uint64(63)).any()):
-        return None
-    V = Vu.astype(np.int64)
-    t = 6 + p2  # index after tag ints
-    ok = ((V[:, 0] == 0x12) & (V[:, 2] == 0x08) & (V[:, 4] == 0x12)
-          & (V[:, t] == 0x18) & (V[:, t + 1] == 1) & (V[:, t + 2] == 0x22)
-          & (V[:, t + 4] == 9))
-    if not bool(ok.all()):
-        return None
-    ids = V[:, 3]
-    key_idx = V[:, 6:6 + p2:2]
-    val_idx = V[:, 7:7 + p2:2]
-    zz = V[:, t + 5:t + 7]
-    px = np.where(zz[:, 0] % 2 == 1, -((zz[:, 0] + 1) // 2), zz[:, 0] // 2)
-    py = np.where(zz[:, 1] % 2 == 1, -((zz[:, 1] + 1) // 2), zz[:, 1] // 2)
-    return ids, key_idx, val_idx, px, py, n_props
-
-
 def decode_tile(buf: bytes, z: int = 0, x: int = 0, y: int = 0,
                 mode: str = "lnglat", layers: list[str] | None = None):
     """ReadTile (read_tile.go:77-359): full decode of every feature of every
@@ -1046,72 +995,88 @@ def bulk_point_tile_stats(bufs: list, distinct_prop: str,
 
 
 # ---------------------------------------------------------------------------
-# full-geometry vertex decode: the per-feature walk (oracle) and the
-# columnar kernel, both returning the same vertex-row columns
+# the feature table: one row per feature of a batch of tiles, built by the
+# columnar kernel or, per tile, by the per-feature walk (its oracle).
+# Every decode entry point is a projection of it.
+#
+#   tile          index of the feature's tile in the input list
+#   layer         index into ``layer_names``
+#   extent        the layer's extent (float64, as the projection reads it)
+#   feature_id    uint64; 0 = no id (null)
+#   geom_type     the raw MVT geom type
+#   geojson_type  index into GEOJSON_TYPES: inferred from the geometry, or
+#                 GEOM_TYPE_NAME's name in mode 'props' and for a feature
+#                 without a geometry field, as decode_feature does
+#   n_rings -> ring_len -> ix, iy   ring CSR in tile ints (empty in 'props')
+#   n_tags -> tag_key, tag_val      tag CSR: indices into ``keys``/``values``
 # ---------------------------------------------------------------------------
 
-# geojson_type codes of the vertex-row columns; "" = unknown geom type
 GEOJSON_TYPES = ("", "Point", "MultiPoint", "LineString", "MultiLineString",
                  "Polygon", "MultiPolygon")
 _GEOJSON_CODE = {name: i for i, name in enumerate(GEOJSON_TYPES)}
+_FEATURE_COLS = ("tile", "layer", "extent", "feature_id", "geom_type",
+                 "geojson_type", "n_rings", "n_tags")
+_LISTS = ("layer_names", "keys", "values")
 
 
-def _vertex_columns(tile_f, layer_f, fid_f, gj_f, rings_per_feat, ring_lens,
-                    ix, iy, layer_names) -> dict:
-    """Per-feature metadata + flat ring lengths/vertices -> vertex-row
-    columns: tile (index into the input list), layer (index into
-    ``layer_names``), feature_id + fid_valid (id 0 / absent = null),
-    geojson_type (index into GEOJSON_TYPES), ring_idx (ring within its
-    feature), pt_idx (vertex within its ring), ix, iy."""
-    ring_lens = np.asarray(ring_lens, np.int64)
-    rpf = np.asarray(rings_per_feat, np.int64)
-    ring_feat = np.repeat(np.arange(len(rpf)), rpf)
-    cnt = np.bincount(ring_feat, weights=ring_lens,
-                      minlength=len(rpf)).astype(np.int64)
-    ring_in_feat = np.arange(len(ring_lens)) - np.repeat(np.cumsum(rpf) - rpf,
-                                                         rpf)
-    nv = int(ring_lens.sum())
-    fid_f = np.asarray(fid_f, np.int64)
-    return {
-        "tile": np.repeat(np.asarray(tile_f, np.int64), cnt),
-        "layer": np.repeat(np.asarray(layer_f, np.int32), cnt),
-        "feature_id": np.repeat(fid_f, cnt),
-        "fid_valid": np.repeat(fid_f != 0, cnt),
-        "geojson_type": np.repeat(np.asarray(gj_f, np.int8), cnt),
-        "ring_idx": np.repeat(ring_in_feat.astype(np.int32), ring_lens),
-        "pt_idx": (np.arange(nv) - np.repeat(np.cumsum(ring_lens) - ring_lens,
-                                             ring_lens)).astype(np.int32),
-        "ix": np.asarray(ix, np.int64), "iy": np.asarray(iy, np.int64),
-        "layer_names": list(layer_names),
-    }
-
-
-def decode_vertices_walk(bufs: list) -> dict:
-    """The per-feature decode_tile walk over a list of tile bytes (None =
-    null tile, skipped) -> vertex-row columns (_vertex_columns). Features
-    without vertices emit no rows. This is the oracle the columnar kernel
-    is tested against, and its fallback for tiles it does not take."""
-    tile_f, layer_f, fid_f, gj_f, rpf, ring_lens = [], [], [], [], [], []
-    xs, ys = [], []
+def feature_table_walk(bufs: list, mode: str = "int", layers=None,
+                       errors: list | None = None) -> dict:
+    """decode_tile's per-feature walk over a list of tile bytes (None = null
+    tile, skipped) -> the feature table. It is the oracle bulk_feature_table
+    is tested against, and its fallback for the tiles it does not take.
+    Mode 'props' skips geometry, any other mode decodes tile ints. A tile
+    the walk raises on is appended to ``errors`` as (tile index, exception)
+    and yields no rows; with ``errors`` None the exception propagates."""
+    inner = "props" if mode == "props" else "int"
+    tile, layer, extent, gj, n_rings, ring_len, n_tags = ([] for _ in range(7))
+    fids, gtypes, xs, ys = [], [], [], []
     names: dict = {}
-    for t, buf in enumerate(bufs):
-        if buf is None:
+    keys, values = [], []
+    for t, b in enumerate(bufs):
+        if b is None:
             continue
-        for lname, f in decode_tile(bytes(buf), mode="int"):
-            if not sum(f.ring_lens):
-                continue
-            tile_f.append(t)
-            layer_f.append(names.setdefault(lname, len(names)))
-            fid_f.append(f.feature_id or 0)
-            gj_f.append(_GEOJSON_CODE[f.geojson_type])
-            rpf.append(len(f.ring_lens))
-            ring_lens.extend(f.ring_lens)
+        try:
+            feats = [(lf, decode_feature(lf, span, inner))
+                     for lf in parse_tile(bytes(b))
+                     if layers is None or lf.name in layers
+                     for span in lf.feature_spans]
+            # inside the try: an id or type too wide for its column is this
+            # tile's error, not the batch's
+            fids.append(np.array([f.feature_id or 0 for _, f in feats],
+                                 np.uint64))
+            gtypes.append(np.array([f.geom_type for _, f in feats], np.int64))
+        except Exception as e:  # noqa: BLE001 — the caller's error contract
+            if errors is None:
+                raise
+            errors.append((t, e))
+            continue
+        for lf, f in feats:
+            tile.append(t)
+            layer.append(names.setdefault(lf.name, len(names)))
+            extent.append(lf.extent)
+            gj.append(_GEOJSON_CODE[f.geojson_type])
+            n_rings.append(len(f.ring_lens))
+            ring_len.extend(f.ring_lens)
             xs.append(f.xs)
             ys.append(f.ys)
-    ix = np.concatenate(xs).astype(np.int64) if xs else np.zeros(0, np.int64)
-    iy = np.concatenate(ys).astype(np.int64) if ys else np.zeros(0, np.int64)
-    return _vertex_columns(tile_f, layer_f, fid_f, gj_f, rpf, ring_lens,
-                           ix, iy, names)
+            n_tags.append(len(f.properties))
+            keys.extend(f.properties)
+            values.extend(f.properties.values())
+    tags = np.arange(len(keys))
+    return {
+        "tile": np.array(tile, np.int64), "layer": np.array(layer, np.int64),
+        "extent": np.array(extent, np.float64),
+        "feature_id": np.concatenate([*fids, np.zeros(0, np.uint64)]),
+        "geom_type": np.concatenate([*gtypes, np.zeros(0, np.int64)]),
+        "geojson_type": np.array(gj, np.int8),
+        "n_rings": np.array(n_rings, np.int64),
+        "n_tags": np.array(n_tags, np.int64),
+        "ring_len": np.array(ring_len, np.int64),
+        "ix": np.concatenate([*xs, np.zeros(0)]).astype(np.int64),
+        "iy": np.concatenate([*ys, np.zeros(0)]).astype(np.int64),
+        "tag_key": tags, "tag_val": tags.copy(),
+        "layer_names": list(names), "keys": keys, "values": values,
+    }
 
 
 def _excl_cumsum(a: np.ndarray) -> np.ndarray:
@@ -1121,18 +1086,28 @@ def _excl_cumsum(a: np.ndarray) -> np.ndarray:
     return out
 
 
+def _ragged(counts: np.ndarray, idx: np.ndarray) -> np.ndarray:
+    """Positions, in a CSR child array with ``counts`` children per parent,
+    of the children of parents ``idx``, in that order."""
+    n = counts[idx]
+    return (np.repeat(_excl_cumsum(counts)[idx] - _excl_cumsum(n), n)
+            + np.arange(int(n.sum())))
+
+
 def _scan_feature_fields(buf, fs, fe, lim):
     """Lock-step field scan over every feature body at once (the
     bulk_scan_point_tiles idiom, one numpy pass per field ordinal): the
-    last id, geom type and geometry span of each feature, as
-    decode_feature reads them. ``ok`` is False where the walk could differ
-    or raise — a multi-byte field key, a wire type other than 0/2, a varint
-    wider than 9 bytes (ids >= 2^63 included), or any read past the tile's
-    own bytes (``lim``)."""
+    last id, geom type and geometry span and the tags span of each
+    feature, as decode_feature reads them. ``ok`` is False where the walk
+    could differ or raise — a multi-byte field key, a wire type other than
+    0/2, a varint wider than 9 bytes (ids >= 2^63 included), a second tags
+    field, or any read past the tile's own bytes (``lim``)."""
     n = len(fs)
     ok = np.ones(n, bool)
     fid = np.zeros(n, np.int64)
     gtype = np.zeros(n, np.int64)
+    ts = np.zeros(n, np.int64)
+    te = np.zeros(n, np.int64)
     gs = np.zeros(n, np.int64)
     ge = np.zeros(n, np.int64)
     pos = fs.copy()
@@ -1158,12 +1133,37 @@ def _scan_feature_fields(buf, fs, fe, lim):
         fid[a[m]] = v[m]
         m = ~is2 & (fno == 3)
         gtype[a[m]] = v[m]
+        m = is2 & (fno == 2)
+        ok[a[m][te[a[m]] > 0]] = False
+        ts[a[m]] = val_end[m]
+        te[a[m]] = nxt[m]
         m = is2 & (fno == 4)
         gs[a[m]] = val_end[m]
         ge[a[m]] = nxt[m]
         pos[a] = nxt
         act = a[nxt < fe[a]]
-    return ok, fid, gtype, gs, ge
+    return ok, fid, gtype, ts, te, gs, ge
+
+
+def _terminated(buf, s, e) -> np.ndarray:
+    """Spans that are empty or end on a varint's last byte. An unterminated
+    trailing varint decodes differently in the walk (tags drop it, the
+    geometry's short and long paths differ), and it must not merge into
+    the next span of a one-pass decode."""
+    return (e == s) | (buf[np.maximum(e - 1, 0)] < 0x80)
+
+
+def _span_varints(buf, s, e):
+    """The varints of many byte spans in ONE varint_decode_all pass:
+    span i holds values[first[i]:end[i]]; ``nbytes`` is each value's byte
+    width."""
+    ln = e - s
+    so = _excl_cumsum(ln)
+    raw = buf[np.repeat(s - so, ln) + np.arange(int(ln.sum()))]
+    term = raw < 0x80
+    tcum = np.concatenate([[0], np.cumsum(term, dtype=np.int64)])
+    nbytes = np.diff(np.concatenate([[-1], np.flatnonzero(term)]))
+    return varint_decode_all(raw), tcum[so], tcum[so + ln], nbytes
 
 
 def _walk_commands(vals, vs, ve):
@@ -1201,85 +1201,19 @@ def _walk_commands(vals, vs, ve):
             np.concatenate(rpart)[order])
 
 
-def bulk_decode_vertices(bufs: list):
-    """Columnar vertex decode of a whole batch of tiles — the kernel twin
-    of decode_vertices_walk, with no per-feature Python:
-
-    1. parse_tile layer frames give the feature spans;
-    2. a lock-step field scan reads id, type and geometry span of every
-       feature (_scan_feature_fields);
-    3. ONE varint_decode_all pass decodes every geometry's command ints;
-    4. a lock-step command walk finds the MoveTo/LineTo runs
-       (_walk_commands);
-    5. one zigzag decode and one cumsum give the vertices, the cursor
-       reset per feature;
-    6. type-3 rings are closed with one gather and their signed areas
-       summed with one add.reduceat, to infer Polygon vs MultiPolygon
-       (read_tile.go:278-307);
-    7. type-1 parts merge into one ring, as _infer_simple_type does.
-
-    Returns (columns, handled): columns as _vertex_columns for the handled
-    tiles only; handled[i] False where the kernel cannot reproduce the walk
-    exactly (parse errors, truncated fields, an unterminated trailing
-    varint or a command int >= 2^32 in a geometry, ids >= 2^63, unknown
-    wire types) — the caller runs the walk for those tiles."""
-    m = len(bufs)
-    handled = np.zeros(m, bool)
-    tlen = np.array([0 if b is None else len(b) for b in bufs], np.int64)
-    toff = _excl_cumsum(tlen)
-    # 10 zero sentinel bytes: varint reads never index past the buffer
-    buf = np.frombuffer(b"".join(b for b in bufs if b is not None)
-                        + b"\x00" * 10, np.uint8)
-    names: dict = {}
-    spans, f_tile, f_layer = [], [], []
-    for t, b in enumerate(bufs):
-        if b is None:
-            handled[t] = True
-            continue
-        try:
-            frames = parse_tile(bytes(b))
-        except Exception:  # noqa: BLE001 — the walk re-raises it
-            continue
-        handled[t] = True
-        for lf in frames:
-            if lf.feature_spans:
-                spans.append(np.asarray(lf.feature_spans, np.int64) + toff[t])
-                f_tile.append(np.full(len(lf.feature_spans), t, np.int64))
-                f_layer.append(np.full(len(lf.feature_spans),
-                                       names.setdefault(lf.name, len(names)),
-                                       np.int64))
-    if not spans:
-        return decode_vertices_walk([]), handled
-    spans = np.concatenate(spans)
-    f_tile = np.concatenate(f_tile)
-    f_layer = np.concatenate(f_layer)
-    lim = (toff + tlen)[f_tile]
-
-    # --- 2. fields; 3. geometry varints
-    ok, fid, gtype, gs, ge = _scan_feature_fields(buf, spans[:, 0],
-                                                  spans[:, 1], lim)
-    glen = ge - gs
-    # an unterminated trailing varint decodes differently in the walk's
-    # short and long paths; it must also not merge into the next feature
-    ok &= (glen == 0) | (buf[np.maximum(ge - 1, 0)] < 0x80)
-    handled[f_tile[~ok]] = False
-    live = handled[f_tile] & (glen > 0)
-    glen = np.where(live, glen, 0)
-    total = int(glen.sum())
-    gstart = _excl_cumsum(glen)
-    raw = buf[np.repeat(gs - gstart, glen) + np.arange(total)]
-    term = raw < 0x80
-    vals = varint_decode_all(raw)
-    tcum = np.concatenate([[0], np.cumsum(term, dtype=np.int64)])
-    ve = tcum[gstart + glen]
-    vs = tcum[gstart]
+def _decode_geometry(buf, gs, ge, gtype, live):
+    """Steps 4-7 of bulk_feature_table over the geometry spans of the
+    ``live`` features -> (bad, n_rings, ring_len, ring_feat, x, y,
+    inferred geojson code); ``bad`` marks the features whose command ints
+    the walk reads differently."""
+    nf = len(gs)
+    vals, vs, ve, nbytes = _span_varints(buf, gs, np.where(live, ge, gs))
     # command ints must fit uint32 in at most 5 bytes, so the walk's
     # 32-bit masks and casts are no-ops
-    wide = np.diff(np.concatenate([[-1], np.flatnonzero(term)])) > 5
-    big = (vals >= np.uint64(1 << 32)) | wide
+    big = (vals >= np.uint64(1 << 32)) | (nbytes > 5)
+    bad = np.zeros(nf, bool)
     if big.any():
-        feat_of_val = np.repeat(np.arange(len(vs)), ve - vs)
-        handled[f_tile[feat_of_val[big]]] = False
+        bad[np.repeat(np.arange(nf), ve - vs)[big]] = True
         vals[big] = 0   # keep run counts non-negative in the walk below
     vals = vals.astype(np.int64)
 
@@ -1323,10 +1257,10 @@ def bulk_decode_vertices(bufs: list):
         rlen = new_len
         rs = _excl_cumsum(rlen)
         re_ = rs + rlen - 1
-    nrings = np.bincount(rfeat, minlength=len(vs))
+    nrings = np.bincount(rfeat, minlength=nf)
     first = np.ones(len(rs), bool)
     first[1:] = rfeat[1:] != rfeat[:-1]
-    n_neg = np.zeros(len(vs), np.int64)
+    n_neg = np.zeros(nf, np.int64)
     if poly.any():
         xf, yf = x.astype(np.float64), y.astype(np.float64)
         xprev = np.empty_like(xf)
@@ -1334,45 +1268,233 @@ def bulk_decode_vertices(bufs: list):
         xprev[1:], yprev[1:] = xf[:-1], yf[:-1]
         xprev[rs], yprev[rs] = xf[re_], yf[re_]
         area = np.add.reduceat((xprev - xf) * (yf + yprev), rs)
-        n_neg = np.bincount(rfeat[poly & ~first & (area < 0)],
-                            minlength=len(vs))
+        n_neg = np.bincount(rfeat[poly & ~first & (area < 0)], minlength=nf)
 
     # --- 7. geojson type per feature
-    npts = np.bincount(rfeat, weights=rlen, minlength=len(vs))
+    npts = np.bincount(rfeat, weights=rlen, minlength=nf)
     gj = np.select(
         [gtype == 1, gtype == 2, gtype == 3],
         [np.where(npts == 1, _GEOJSON_CODE["Point"],
                   _GEOJSON_CODE["MultiPoint"]),
          np.where(nrings <= 1, _GEOJSON_CODE["LineString"],
                   _GEOJSON_CODE["MultiLineString"]),
-         np.where(n_neg == 0, _GEOJSON_CODE["Polygon"],
+         np.where((nrings > 0) & (n_neg == 0), _GEOJSON_CODE["Polygon"],
                   _GEOJSON_CODE["MultiPolygon"])], 0)
-    feats = np.flatnonzero((nrings > 0) & handled[f_tile])
-    keep_r = handled[f_tile[rfeat]]
+    return bad, nrings, rlen, rfeat, x, y, gj
+
+
+def bulk_feature_table(bufs: list, mode: str = "int", layers=None):
+    """Columnar decode of a whole batch of tiles into the feature table —
+    the kernel twin of feature_table_walk, with no per-feature Python:
+
+    1. parse_tile layer frames give the feature spans, and their key and
+       value dictionaries concatenate into batch-level lists;
+    2. a lock-step field scan reads the id, type, tags span and geometry
+       span of every feature (_scan_feature_fields);
+    3. ONE varint_decode_all pass decodes every feature's tags into
+       indices of the batch lists (out of range -> "", read_tile.go:193-204);
+
+    and, unless mode is 'props' (_decode_geometry):
+
+    4. one more pass decodes every geometry's command ints, and a lock-step
+       command walk finds the MoveTo/LineTo runs (_walk_commands);
+    5. one zigzag decode and one cumsum give the vertices, the cursor
+       reset per feature;
+    6. type-3 rings are closed with one gather and their signed areas
+       summed with one add.reduceat, to infer Polygon vs MultiPolygon
+       (read_tile.go:278-307);
+    7. type-1 parts merge into one ring, as _infer_simple_type does.
+
+    Returns (table, handled): the table holds the handled tiles only;
+    handled[i] is False where the kernel cannot reproduce the walk exactly
+    (parse errors, truncated fields, ids or tag ids >= 2^63, unknown wire
+    types, a second tags field, a key repeated within a feature, an
+    unterminated trailing varint, a command int >= 2^32) — the caller runs
+    the walk for those tiles."""
+    m = len(bufs)
+    handled = np.zeros(m, bool)
+    tlen = np.array([0 if b is None else len(b) for b in bufs], np.int64)
+    toff = _excl_cumsum(tlen)
+    # 10 zero sentinel bytes: varint reads never index past the buffer
+    buf = np.frombuffer(b"".join(b for b in bufs if b is not None)
+                        + b"\x00" * 10, np.uint8)
+    names: dict = {}
+    keys, values = [""], [""]   # index 0 is what an out-of-range id reads
+    spans, frames, extents = [], [], []
+    for t, b in enumerate(bufs):
+        if b is None:
+            handled[t] = True
+            continue
+        try:
+            lfs = parse_tile(bytes(b))
+        except Exception:  # noqa: BLE001 — the walk re-raises it
+            continue
+        handled[t] = True
+        for lf in lfs:
+            if lf.feature_spans and (layers is None or lf.name in layers):
+                spans.append(np.asarray(lf.feature_spans, np.int64) + toff[t])
+                frames.append((t, names.setdefault(lf.name, len(names)),
+                               len(keys), len(lf.keys), len(values),
+                               len(lf.values), len(lf.feature_spans)))
+                extents.append(lf.extent)
+                keys += lf.keys
+                values += lf.values
+    if not spans:
+        return feature_table_walk([]), handled
+    frames = np.array(frames, np.int64)
+    f_tile, f_layer, f_koff, f_nk, f_voff, f_nv = np.repeat(
+        frames[:, :6], frames[:, 6], axis=0).T
+    f_ext = np.repeat(np.array(extents, np.float64), frames[:, 6])
+    spans = np.concatenate(spans)
+    nf = len(spans)
+
+    # --- 2. fields
+    ok, fid, gtype, ts, te, gs, ge = _scan_feature_fields(
+        buf, spans[:, 0], spans[:, 1], (toff + tlen)[f_tile])
+    ok &= _terminated(buf, ts, te)
+    if mode != "props":
+        ok &= _terminated(buf, gs, ge)
+    handled[f_tile[~ok]] = False
+
+    # --- 3. tags: (key, value) pairs -> batch dictionary indices
+    tv, tfirst, tend, nbytes = _span_varints(
+        buf, ts, np.where(handled[f_tile], te, ts))
+    wide = nbytes > 9
+    handled[f_tile[np.repeat(np.arange(nf), tend - tfirst)[wide]]] = False
+    tv = np.where(wide, 0, tv).astype(np.int64)
+    n_tags = (tend - tfirst) // 2
+    pf = np.repeat(np.arange(nf), n_tags)
+    pi = tfirst[pf] + 2 * (np.arange(len(pf)) - _excl_cumsum(n_tags)[pf])
+    k, v = tv[pi], tv[pi + 1]
+    tag_key = np.where(k < f_nk[pf], f_koff[pf] + k, 0)
+    tag_val = np.where(v < f_nv[pf], f_voff[pf] + v, 0)
+    # a key repeated within a feature — by string, so duplicate dictionary
+    # entries and out-of-range ids count — keeps one entry in the walk's dict
+    code: dict = {}
+    kc = np.array([code.setdefault(s, len(code)) for s in keys],
+                  np.int64)[tag_key]
+    o = np.lexsort((kc, pf))
+    dup = (pf[o][1:] == pf[o][:-1]) & (kc[o][1:] == kc[o][:-1])
+    handled[f_tile[pf[o][1:][dup]]] = False
+
+    plain = np.select([gtype == 1, gtype == 2, gtype == 3],
+                      [_GEOJSON_CODE[GEOM_TYPE_NAME[i]] for i in (1, 2, 3)], 0)
+    if mode == "props":
+        nrings = np.zeros(nf, np.int64)
+        rlen = rfeat = x = y = np.zeros(0, np.int64)
+        gj = plain
+    else:
+        bad, nrings, rlen, rfeat, x, y, gj = _decode_geometry(
+            buf, gs, ge, gtype, handled[f_tile])
+        handled[f_tile[bad]] = False
+        gj = np.where(ge > 0, gj, plain)   # no geometry field: un-inferred
+
+    keep = handled[f_tile]
+    keep_r = keep[rfeat]
     keep_v = np.repeat(keep_r, rlen)
-    return _vertex_columns(f_tile[feats], f_layer[feats], fid[feats],
-                           gj[feats], nrings[feats], rlen[keep_r],
-                           x[keep_v], y[keep_v], names), handled
+    keep_t = keep[pf]
+    return {
+        "tile": f_tile[keep], "layer": f_layer[keep], "extent": f_ext[keep],
+        "feature_id": fid[keep].astype(np.uint64),
+        "geom_type": gtype[keep], "geojson_type": gj[keep].astype(np.int8),
+        "n_rings": nrings[keep], "n_tags": n_tags[keep],
+        "ring_len": rlen[keep_r], "ix": x[keep_v], "iy": y[keep_v],
+        "tag_key": tag_key[keep_t], "tag_val": tag_val[keep_t],
+        "layer_names": list(names), "keys": keys, "values": values,
+    }, handled
 
 
-def decode_vertex_rows(bufs: list) -> dict:
-    """Vertex-row columns for a batch of tiles: the columnar kernel, with
-    the per-feature walk for exactly the tiles the kernel hands back. Rows
-    come out in tile order, the same rows as decode_vertices_walk(bufs)
-    (and the same exception for a tile the walk raises on)."""
-    cols, handled = bulk_decode_vertices(bufs)
-    rest = np.flatnonzero(~handled)
-    if not len(rest):
-        return cols
-    walk = decode_vertices_walk([bufs[i] for i in rest])
-    walk["tile"] = rest[walk["tile"]]
-    walk["layer"] = walk["layer"] + len(cols["layer_names"])
-    order = np.argsort(np.concatenate([cols["tile"], walk["tile"]]),
-                       kind="stable")
-    out = {k: np.concatenate([cols[k], walk[k]])[order]
-           for k in cols if k != "layer_names"}
-    out["layer_names"] = cols["layer_names"] + walk["layer_names"]
+def take_features(table: dict, idx) -> dict:
+    """The features ``idx`` of a feature table, in that order, with their
+    rings, vertices and tags; the dictionaries stay as they are."""
+    ri = _ragged(table["n_rings"], idx)
+    vi = _ragged(table["ring_len"], ri)
+    ti = _ragged(table["n_tags"], idx)
+    out = {k: table[k][idx] for k in _FEATURE_COLS}
+    out.update(ring_len=table["ring_len"][ri], ix=table["ix"][vi],
+               iy=table["iy"][vi], tag_key=table["tag_key"][ti],
+               tag_val=table["tag_val"][ti])
+    out.update({k: table[k] for k in _LISTS})
     return out
+
+
+def _merge_tables(a: dict, b: dict) -> dict:
+    """Two feature tables as one, features in tile order (stable)."""
+    c = {k: np.concatenate([a[k], b[k]]) for k in a if k not in _LISTS}
+    for col, lst in (("layer", "layer_names"), ("tag_key", "keys"),
+                     ("tag_val", "values")):
+        c[col][len(a[col]):] += len(a[lst])
+    c.update({k: a[k] + b[k] for k in _LISTS})
+    return take_features(c, np.argsort(c["tile"], kind="stable"))
+
+
+def feature_table(bufs: list, mode: str = "int", layers=None,
+                  errors: list | None = None) -> dict:
+    """The feature table of a batch of tiles: the columnar kernel, with the
+    walk for exactly the tiles the kernel hands back. Features come out in
+    tile order, the same rows as feature_table_walk(bufs, mode, layers,
+    errors), and the same exception or ``errors`` entry for a tile the
+    walk raises on."""
+    table, handled = bulk_feature_table(bufs, mode, layers)
+    if handled.all():
+        return table
+    rest = [None if h else b for b, h in zip(bufs, handled)]
+    return _merge_tables(table, feature_table_walk(rest, mode, layers, errors))
+
+
+def _verts_per_feature(table: dict) -> np.ndarray:
+    nr = table["n_rings"]
+    c = np.concatenate([[0], np.cumsum(table["ring_len"])])
+    ends = np.cumsum(nr)
+    return c[ends] - c[ends - nr]
+
+
+def first_vertex(table: dict):
+    """(x, y) of each feature's first vertex in tile ints, float64 — NaN
+    for a feature without vertices (every feature in mode 'props')."""
+    nv = _verts_per_feature(table)
+    has = nv > 0
+    at = _excl_cumsum(nv)[has]
+    fx = np.full(len(nv), np.nan)
+    fy = np.full(len(nv), np.nan)
+    fx[has] = table["ix"][at]
+    fy[has] = table["iy"][at]
+    return fx, fy
+
+
+def prop_index(table: dict, key: str) -> np.ndarray:
+    """Per feature, the index into ``values`` of property ``key``, or -1
+    where the feature lacks it (a table holds a key once per feature)."""
+    nf = len(table["tile"])
+    hit = np.array([k == key for k in table["keys"]], bool)[table["tag_key"]]
+    idx = np.full(nf, -1, np.int64)
+    idx[np.repeat(np.arange(nf), table["n_tags"])[hit]] = \
+        table["tag_val"][hit]
+    return idx
+
+
+def vertex_rows(table: dict) -> dict:
+    """The vertex-row projection of a feature table: one row per vertex of
+    every feature that has vertices — tile, layer (index into
+    ``layer_names``), feature_id + fid_valid (id 0 / absent = null),
+    geojson_type (index into GEOJSON_TYPES), ring_idx (ring within its
+    feature), pt_idx (vertex within its ring), ix, iy."""
+    nr, rl = table["n_rings"], table["ring_len"]
+    cnt = _verts_per_feature(table)
+    fid = table["feature_id"]
+    ring_in_feat = np.arange(len(rl)) - np.repeat(_excl_cumsum(nr), nr)
+    return {
+        "tile": np.repeat(table["tile"], cnt),
+        "layer": np.repeat(table["layer"], cnt),
+        "feature_id": np.repeat(fid, cnt),
+        "fid_valid": np.repeat(fid != 0, cnt),
+        "geojson_type": np.repeat(table["geojson_type"], cnt),
+        "ring_idx": np.repeat(ring_in_feat, rl).astype(np.int32),
+        "pt_idx": (np.arange(int(rl.sum()))
+                   - np.repeat(_excl_cumsum(rl), rl)).astype(np.int32),
+        "ix": table["ix"], "iy": table["iy"],
+        "layer_names": table["layer_names"],
+    }
 
 
 def round_half_away(v, dim: float) -> np.ndarray:

@@ -8,8 +8,10 @@ repartition on the tile key, sortWithinPartitions, then one streaming
 ``mapInArrow`` whose sorted-group carry (_stream_sorted_arrow_groups)
 hands whole tile groups to a bulk kernel or, per tile, to the scalar
 encode_layer oracle; output batches are built straight from numpy arrays.
-Full-geometry decode is a mapInArrow over the columnar vertex kernel; the
-remaining decode entry points still cross as pandas frames (mapInPandas).
+Every decode entry point is one mapInArrow (_decode_plan) over a
+projection of the feature table of each bounded chunk of an Arrow batch
+(decode.feature_table: the columnar kernel, with the per-feature walk for
+the tiles it hands back), under one per-tile error contract (_tile_error).
 
 Scale notes (the 100 TB story):
 - encode shuffles once on (z, x, y) — the same explicit boundary the
@@ -25,18 +27,12 @@ Scale notes (the 100 TB story):
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 TILE_SCHEMA = "z int, x bigint, y bigint, layer string, tile_pbf binary, n_features int"
-
-FEATURE_SCHEMA = ("z int, x bigint, y bigint, layer string, feature_id bigint, "
-                  "geom_type int, geojson_type string, lng double, lat double, "
-                  "properties map<string,string>")
 
 
 def _col(rb, name: str) -> np.ndarray:
@@ -192,241 +188,187 @@ def encode_point_tiles_salted(entities: DataFrame, layer_name: str = "geo",
                     .alias("tile_pbf"), "n_features"))
 
 
+def _zxy(rb, rows) -> list:
+    """Arrow arrays of z (int32), x and y (int64) for the input ``rows``."""
+    import pyarrow as pa
+    return [pa.array(_col(rb, k)[rows].astype(dt))
+            for k, dt in (("z", np.int32), ("x", np.int64), ("y", np.int64))]
+
+
+def _tile_error(rb, t: int, exc: Exception, quarantine: bool) -> str:
+    """The one decode error contract, the reference's per-tile
+    panic/recover (read_tile.go:79-84) at scale: a tile the walk raises on
+    fails the task with its z/x/y named or, under ``quarantine``, becomes
+    one error row carrying the returned message."""
+    z, x, y = (rb.column(c)[t].as_py() for c in ("z", "x", "y"))
+    msg = f"tile z={z} x={x} y={y}: {exc!r}"
+    if quarantine:
+        return msg[:200]
+    raise ValueError(msg) from exc
+
+
+def _decode_table(rb, mode: str, layers=None, quarantine: bool = False,
+                  rows=None, ids: bool = False):
+    """The feature table (decode.feature_table) of the tiles ``rows``
+    (default all) of one chunk of (z, x, y, tile_pbf) under the error
+    contract -> (table, error tiles, error messages), tiles as row indices
+    of the chunk. ``ids``: the projection emits feature_id as bigint, so a
+    tile with an id >= 2^63 is that tile's error too."""
+    from ..codec.decode import feature_table, take_features
+    bufs = rb.column("tile_pbf").to_pylist()
+    rows = np.arange(len(bufs)) if rows is None else rows
+    errors: list = []
+    table = feature_table([bufs[i] for i in rows], mode, layers, errors)
+    table["tile"] = rows[table["tile"]]
+    errors = [(rows[t], e) for t, e in errors]
+    fid, tile = table["feature_id"], table["tile"]
+    if ids and (fid >= np.uint64(1 << 63)).any():
+        bad = np.unique(tile[fid >= np.uint64(1 << 63)])
+        errors += [(i, OverflowError(f"feature id {fid[tile == i].max()} "
+                                     "does not fit bigint")) for i in bad]
+        errors.sort(key=lambda e: e[0])
+        table = take_features(table, np.flatnonzero(~np.isin(tile, bad)))
+    msgs = [_tile_error(rb, t, e, quarantine) for t, e in errors]
+    return table, np.array([t for t, _ in errors], np.int64), msgs
+
+
+# The decode plan projects each Arrow batch in chunks of at most
+# _DECODE_CHUNK tiles and _DECODE_BYTES wire bytes (a bigger tile goes
+# alone), whatever the batch size. 256 KB: the kernels' int64 temporaries
+# expand ~30x over the wire bytes, so this keeps each chunk's temporaries
+# ~8 MB (cache-adjacent, under the host's streaming-pass inflation
+# threshold, BASELINE.md r3/r4).
+_DECODE_CHUNK = 1024
+_DECODE_BYTES = 1 << 18
+
+
+def _chunks(rb):
+    """An Arrow batch of (z, x, y, tile_pbf) as consecutive slices within
+    the chunk caps."""
+    import pyarrow.compute as pc
+    size = pc.binary_length(rb.column("tile_pbf")).fill_null(0).to_numpy()
+    cum = np.cumsum(size, dtype=np.int64)
+    lo = 0
+    while lo < rb.num_rows:
+        cap = (cum[lo - 1] if lo else 0) + _DECODE_BYTES
+        hi = min(lo + _DECODE_CHUNK,
+                 max(lo + 1, int(np.searchsorted(cum, cap, "right"))))
+        yield rb.slice(lo, hi - lo)
+        lo = hi
+
+
+def _decode_plan(tiles: DataFrame, schema, project) -> DataFrame:
+    """The one decode plan: (z, x, y, tile_pbf) through one mapInArrow.
+    project(chunk) turns each chunk (_chunks) of an Arrow batch into an
+    output batch of ``schema`` (a pyarrow schema), or None when it has no
+    rows."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    def run(batches):
+        for rb in batches:
+            for chunk in _chunks(rb):
+                out = project(chunk)
+                if out is not None and out.num_rows:
+                    yield out
+
+    return tiles.select("z", "x", "y", "tile_pbf").mapInArrow(
+        run, from_arrow_schema(schema))
+
+
+def _ddl_schema(ddl: str):
+    """A Spark DDL column list as a pyarrow schema, parsed where the plan
+    is built (the parser needs the active SparkContext)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+    return to_arrow_schema(StructType.fromDDL(ddl))
+
+
 def decode_tiles(tiles: DataFrame, mode: str = "lnglat",
                  layers: list[str] | None = None,
                  prop_cols: tuple[str, ...] | None = None,
                  quarantine: bool = False) -> DataFrame:
-    """tiles(z, x, y, tile_pbf) -> feature rows. Point-centric projection:
-    emits (lng, lat) of the first coordinate for point features; full
-    geometry consumers use decode_tile_vertices.
+    """tiles(z, x, y, tile_pbf) -> feature rows: a point-centric projection
+    of the feature table. (lng, lat) is each feature's first vertex, all
+    inverse-projected in ONE vectorized call per batch (the per-feature
+    Project of read_feature_lazy.go:54-63); it is null for a feature
+    without vertices and in mode 'props', which skips geometry and keeps
+    the un-inferred geojson_type. Full geometry consumers use
+    decode_tile_vertices.
 
-    ``prop_cols``: project named properties to flat string columns instead
-    of the map<string,string> — the reference's lazy property projection
-    (README.md:34) pushed into the UDF; flat columns skip the Arrow/JVM map
-    builders, which dominate wide decodes.
+    ``properties`` is a map<string,string> written straight from the
+    table's tag offsets and gathered dictionaries (str() once per
+    dictionary entry). ``prop_cols`` projects named properties to flat
+    string columns instead — the reference's lazy property projection
+    (README.md:34) pushed into the UDF; () drops properties entirely.
 
-    ``quarantine``: corrupt tiles become rows with the ``error`` column set
-    (null feature fields) instead of failing the stage — the distributed
-    form of the reference's per-tile panic/recover (read_tile.go:79-84)."""
-    want_geom = mode != "props"
-    # decode to tile ints; inverse-project the whole Arrow batch in ONE
-    # vectorized call (the per-feature Project of the reference,
-    # read_feature_lazy.go:54-63, amortized batch-wide)
-    inner_mode = "int" if want_geom else "props"
-
-    def decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .. import tilemath as tm
-        from ..codec.decode import bulk_point_layer, decode_feature, parse_tile
-        for pdf in batches:
-            # Two accumulators, merged IN ORDER at batch end: bulk point
-            # layers append whole numpy segments (no per-feature Python —
-            # the r4 VERDICT's remaining interpreter cost on full-feature
-            # decodes); the per-feature walk and error rows append scalars,
-            # flushed into a segment whenever a bulk segment arrives.
-            segs: list[dict] = []
-            cz, cx, cy, clay, cid, cgt, cgj = [], [], [], [], [], [], []
-            cpx, cpy, cext, cprops, cerr = [], [], [], [], []
-            pcols = {c: [] for c in (prop_cols or ())}
-
-            def flush_scalar():
-                if not cz:
-                    return
-                seg = {"z": np.asarray(cz, np.int64),
-                       "x": np.asarray(cx, np.int64),
-                       "y": np.asarray(cy, np.int64),
-                       "layer": np.asarray(clay, object),
-                       "fid": np.asarray(cid, object),
-                       "gt": np.asarray(cgt, object),
-                       "gj": np.asarray(cgj, object),
-                       "px": np.asarray(cpx, np.float64),
-                       "py": np.asarray(cpy, np.float64),
-                       "ext": np.asarray(cext, np.int64),
-                       "err": np.asarray(cerr, object)}
-                if prop_cols is None:
-                    seg["props"] = np.asarray(cprops, object)
-                else:
-                    for c in prop_cols:
-                        seg[c] = np.asarray(pcols[c], object)
-                segs.append(seg)
-                for lst in (cz, cx, cy, clay, cid, cgt, cgj, cpx, cpy,
-                            cext, cprops, cerr, *pcols.values()):
-                    lst.clear()
-
-            def emit_error(z, x, y, msg):
-                # corrupt-tile quarantine (SURVEY.md §4: the reference's
-                # panic/recover per-tile isolation, read_tile.go:79-84,
-                # becomes an error row instead of a failed job — at 10^12
-                # docs one bad tile must not kill the stage)
-                cz.append(z)
-                cx.append(x)
-                cy.append(y)
-                clay.append(None)
-                cid.append(None)
-                cgt.append(None)
-                cgj.append(None)
-                cpx.append(np.nan)
-                cpy.append(np.nan)
-                cext.append(4096)
-                cerr.append(msg[:200])
-                if prop_cols is None:
-                    cprops.append({})
-                else:
-                    for c in prop_cols:
-                        pcols[c].append(None)
-
-            for z, x, y, buf in zip(pdf["z"], pdf["x"], pdf["y"], pdf["tile_pbf"]):
-                if buf is None:
-                    continue
-                z, x, y = int(z), int(x), int(y)
-                try:
-                    frames = parse_tile(bytes(buf))
-                except Exception as e:  # noqa: BLE001 — quarantine, not crash
-                    if quarantine:
-                        emit_error(z, x, y, f"parse: {e!r}")
-                        continue
-                    raise
-                for lf in frames:
-                    if layers is not None and lf.name not in layers:
-                        continue
-                    bulk = bulk_point_layer(lf)
-                    if bulk is not None:
-                        ids, key_idx, val_idx, px, py, n_props = bulk
-                        n = len(ids)
-                        # uniform key layout + in-range dictionary indices
-                        # required for the vectorized join (our encoder
-                        # always satisfies both; foreign tiles fall back)
-                        if (n and bool((key_idx == key_idx[0]).all())
-                                and bool((key_idx[0] < len(lf.keys)).all())
-                                and bool((val_idx < len(lf.values)).all())):
-                            flush_scalar()
-                            fid_obj = ids.astype(object)
-                            fid_obj[ids == 0] = None
-                            seg = {
-                                "z": np.full(n, z, np.int64),
-                                "x": np.full(n, x, np.int64),
-                                "y": np.full(n, y, np.int64),
-                                "layer": np.full(n, lf.name, object),
-                                "fid": fid_obj,
-                                "gt": np.full(n, 1, object),
-                                "gj": np.full(n, "Point", object),
-                                "err": np.full(n, None, object),
-                            }
-                            if want_geom:
-                                seg["px"] = px.astype(np.float64)
-                                seg["py"] = py.astype(np.float64)
-                                seg["ext"] = np.full(n, lf.extent, np.int64)
-                            else:
-                                # match the per-feature walk: props mode
-                                # never exposes coords (lng/lat = NaN)
-                                seg["px"] = np.full(n, np.nan)
-                                seg["py"] = np.full(n, np.nan)
-                                seg["ext"] = np.full(n, 4096, np.int64)
-                            # str() once per DICTIONARY entry, then gather —
-                            # O(distinct values), not O(features x props)
-                            vals_str = np.array([str(v) for v in lf.values],
-                                                dtype=object)
-                            names0 = [lf.keys[k] if k < len(lf.keys) else ""
-                                      for k in key_idx[0].tolist()]
-                            if prop_cols is None:
-                                colvals = [vals_str[val_idx[:, j]]
-                                           for j in range(n_props)]
-                                seg["props"] = np.array(
-                                    [{names0[j]: colvals[j][r]
-                                      for j in range(n_props)}
-                                     for r in range(n)], dtype=object)
-                            else:
-                                for c in prop_cols:
-                                    if c in names0:
-                                        j = names0.index(c)
-                                        seg[c] = vals_str[val_idx[:, j]]
-                                    else:
-                                        seg[c] = np.full(n, None, object)
-                            segs.append(seg)
-                            continue
-                    for span in lf.feature_spans:
-                        try:
-                            f = decode_feature(lf, span, mode=inner_mode)
-                        except Exception as e:  # noqa: BLE001
-                            if quarantine:
-                                emit_error(z, x, y, f"feature: {e!r}")
-                                continue
-                            raise
-                        if f is None:
-                            continue
-                        cz.append(z)
-                        cx.append(x)
-                        cy.append(y)
-                        clay.append(lf.name)
-                        cid.append(f.feature_id)
-                        cgt.append(f.geom_type)
-                        cgj.append(f.geojson_type)
-                        cerr.append(None)
-                        if want_geom and len(f.xs):
-                            cpx.append(f.xs[0])
-                            cpy.append(f.ys[0])
-                            cext.append(lf.extent)
-                        else:
-                            cpx.append(np.nan)
-                            cpy.append(np.nan)
-                            cext.append(4096)
-                        p = f.properties
-                        if prop_cols is None:
-                            cprops.append({k: str(v) for k, v in p.items()})
-                        else:
-                            for c in prop_cols:
-                                v = p.get(c)
-                                pcols[c].append(None if v is None else str(v))
-            flush_scalar()
-            if not segs:
-                continue  # empty batch: yielding nothing beats fighting
-                # pandas' float64 default dtype for empty object columns
-            col = {k: np.concatenate([s[k] for s in segs])
-                   for k in segs[0]}
-            if mode == "lnglat":
-                lngs, lats = tm.project_tile_to_lnglat(
-                    col["px"], col["py"], col["z"],
-                    col["x"].astype(np.float64),
-                    col["y"].astype(np.float64), col["ext"])
-            else:
-                lngs, lats = col["px"], col["py"]
-            data = {"z": pd.Series(col["z"], dtype="int32"),
-                    "x": pd.Series(col["x"], dtype="int64"),
-                    "y": pd.Series(col["y"], dtype="int64"),
-                    "layer": col["layer"], "feature_id": col["fid"],
-                    "geom_type": col["gt"],
-                    "geojson_type": col["gj"], "lng": lngs, "lat": lats}
-            if prop_cols is None:
-                data["properties"] = col["props"]
-            else:
-                for c in prop_cols:
-                    data[c] = col[c]
-            if quarantine:
-                data["error"] = col["err"]
-            yield pd.DataFrame(data)
-
+    ``quarantine``: a corrupt tile becomes ONE row with the ``error``
+    column set (null feature fields) instead of failing the stage."""
+    import pyarrow as pa
+    fields = [("z", pa.int32()), ("x", pa.int64()), ("y", pa.int64()),
+              ("layer", pa.string()), ("feature_id", pa.int64()),
+              ("geom_type", pa.int32()), ("geojson_type", pa.string()),
+              ("lng", pa.float64()), ("lat", pa.float64())]
     if prop_cols is None:
-        schema = FEATURE_SCHEMA
-    elif prop_cols:
-        schema = FEATURE_SCHEMA.replace(
-            "properties map<string,string>",
-            ", ".join(f"{c} string" for c in prop_cols))
-    else:  # properties projected away entirely
-        schema = FEATURE_SCHEMA.replace(
-            ", properties map<string,string>", "")
+        fields.append(("properties", pa.map_(pa.string(), pa.string())))
+    else:
+        fields += [(c, pa.string()) for c in prop_cols]
     if quarantine:
-        schema += ", error string"
-    return tiles.mapInPandas(decode_batch, schema)
+        fields.append(("error", pa.string()))
+    schema = pa.schema(fields)
+
+    def project(rb):
+        from .. import tilemath as tm
+        from ..codec.decode import GEOJSON_TYPES, first_vertex, prop_index
+        t, err, msgs = _decode_table(
+            rb, "props" if mode == "props" else "int", layers, quarantine,
+            ids=True)
+        nf, ne = len(t["tile"]), len(err)
+        rows = np.concatenate([t["tile"], err])
+
+        def pad(a, fill=0):   # error rows follow the feature rows
+            return np.concatenate([a, np.full(ne, fill, a.dtype)])
+
+        def take(names, idx):   # null on error rows and where idx < 0
+            idx = pad(np.asarray(idx, np.int64), -1)
+            return names.take(pa.array(idx, mask=idx < 0))
+
+        px, py = (pad(v, np.nan) for v in first_vertex(t))
+        if mode == "lnglat":
+            px, py = tm.project_tile_to_lnglat(
+                px, py, *(_col(rb, k)[rows] for k in ("z", "x", "y")),
+                pad(t["extent"], 1.0))
+        fid = pad(t["feature_id"])
+        vals = pa.array([str(v) for v in t["values"]], pa.string())
+        arrays = _zxy(rb, rows) + [
+            take(pa.array(t["layer_names"], pa.string()), t["layer"]),
+            pa.array(fid, pa.int64(), mask=fid == 0),
+            pa.array(pad(t["geom_type"]), pa.int32(),
+                     mask=np.arange(nf + ne) >= nf),
+            take(pa.array(GEOJSON_TYPES, pa.string()), t["geojson_type"]),
+            pa.array(px, mask=np.isnan(px)), pa.array(py, mask=np.isnan(py))]
+        if prop_cols is None:
+            arrays.append(pa.MapArray.from_arrays(
+                np.concatenate([[0], np.cumsum(pad(t["n_tags"]))])
+                .astype(np.int32),
+                pa.array(t["keys"], pa.string()).take(t["tag_key"]),
+                vals.take(t["tag_val"])))
+        else:
+            arrays += [take(vals, prop_index(t, c)) for c in prop_cols]
+        if quarantine:
+            arrays.append(pa.array([None] * nf + msgs, pa.string()))
+        return pa.RecordBatch.from_arrays(arrays, schema=schema)
+
+    return _decode_plan(tiles, schema, project)
 
 
-# decode_tile_stats' batch-kernel routing: tiles above _BULK_DECODE_MAX_TILE
-# bytes take the per-tile walk; the rest go to the kernel in chunks of at
-# most _BULK_DECODE_CHUNK tiles and _BULK_DECODE_BYTES wire bytes. 256 KB:
-# the kernel's int64 matrices expand ~30x, so this keeps each chunk's
-# temporaries ~8 MB (cache-adjacent, under the host's streaming-pass
-# inflation threshold).
-_BULK_DECODE_MAX_TILE = 4096
-_BULK_DECODE_CHUNK = 1024
-_BULK_DECODE_BYTES = 1 << 18
+# decode_tile_stats sends tiles of at most _STATS_KERNEL_MAX_TILE bytes to
+# bulk_point_tile_stats and larger ones to the feature table. The kernel's
+# lock-step scan pays one set of numpy passes per feature ordinal of the
+# densest tile in its chunk, so it loses on dense tiles. Uniform z8 point
+# tiles, one ~256 KB chunk at a time (tools/bench_geom_decode.py, 4-vCPU VM),
+# µs/feature kernel vs table: 6.4 vs 11.9 at 79 B, 3.8 vs 4.1 at 418 B,
+# 4.8 vs 2.6 at 1.5 KB, 8.0 vs 2.4 at 3.7 KB, 41 vs 2.4 at 50 KB.
+_STATS_KERNEL_MAX_TILE = 4096
 
 
 def decode_tile_stats(tiles: DataFrame, layers: list[str] | None = None,
@@ -443,129 +385,59 @@ def decode_tile_stats(tiles: DataFrame, layers: list[str] | None = None,
     round-trip queries, because the encoders emit exactly one row per
     (z, x, y): the per-tile group is already complete within the row, so
     the aggregation needs no shuffle at all. Multi-frame tiles (salted
-    concat / composites) union the distinct sets across frames in Python.
+    concat / composites) count every frame.
 
     This is the engine's answer to the decode-return scaling bottleneck
     (BASELINE.md §scaling): the contended Arrow return traffic drops by
     ~features-per-tile (10^3x for dense tiles) for queries that only need
-    per-tile aggregates. Null property values are excluded from the
-    distinct count (countDistinct semantics).
+    per-tile aggregates.
 
-    ``quarantine``: corrupt tiles become zero-count rows with ``error``
-    set instead of failing the stage — same isolation contract as
-    ``decode_tiles(quarantine=True)`` (read_tile.go:79-84 at scale)."""
+    Conforming tiles of at most 4 KB take the cross-tile point kernel
+    (decode.bulk_point_tile_stats); every other tile is a count plus a
+    distinct count over the feature table. ``quarantine``: a corrupt tile
+    becomes one zero-count row with ``error`` set instead of failing the
+    stage — the decode_tiles contract."""
+    import pyarrow as pa
+    schema = pa.schema(
+        [("z", pa.int32()), ("x", pa.int64()), ("y", pa.int64()),
+         ("n_features", pa.int64()), (out_col, pa.int64())]
+        + ([("error", pa.string())] if quarantine else []))
 
-    def tile_counts(buf: bytes) -> tuple[int, int]:
-        from ..codec.decode import bulk_point_layer, decode_feature, parse_tile
-        n = 0
-        vals: set = set()
-        for lf in parse_tile(buf):
-            if layers is not None and lf.name not in layers:
-                continue
-            bulk = bulk_point_layer(lf)
-            if bulk is not None:
-                ids, key_idx, val_idx, _, _, n_props = bulk
-                if (len(ids) and bool((key_idx == key_idx[0]).all())
-                        and bool((key_idx[0] < len(lf.keys)).all())
-                        and bool((val_idx < len(lf.values)).all())):
-                    n += len(ids)
-                    names0 = [lf.keys[k] for k in key_idx[0].tolist()]
-                    if distinct_prop in names0:
-                        j = names0.index(distinct_prop)
-                        varr = np.asarray(lf.values, dtype=object)
-                        # distinct over unique dictionary indices, then map
-                        # to values (robust to foreign tiles with
-                        # duplicated dictionary entries)
-                        for v in varr[np.unique(val_idx[:, j])]:
-                            if v is not None:
-                                vals.add(str(v))
-                    continue
-            for span in lf.feature_spans:
-                f = decode_feature(lf, span, mode="props")
-                if f is None:
-                    continue
-                n += 1
-                v = f.properties.get(distinct_prop)
-                if v is not None:
-                    vals.add(str(v))
-        return n, len(vals)
+    def project(rb):
+        from ..codec.decode import bulk_point_tile_stats, prop_index
+        bufs = rb.column("tile_pbf").to_pylist()
+        n = np.zeros(len(bufs), np.int64)
+        nv = np.zeros(len(bufs), np.int64)
+        handled = np.zeros(len(bufs), bool)
+        small = np.flatnonzero([b is not None and
+                                len(b) <= _STATS_KERNEL_MAX_TILE
+                                for b in bufs])
+        # a kernel exception leaves the chunk to the feature table, whose
+        # walk applies the error contract per tile
+        try:
+            n[small], nv[small], handled[small] = bulk_point_tile_stats(
+                [bufs[i] for i in small], distinct_prop, layers)
+        except Exception:  # noqa: BLE001 — isolate chunk
+            pass
+        rest = np.flatnonzero(~handled)
+        t, err, msgs = _decode_table(rb, "props", layers, quarantine, rest)
+        n[rest] = np.bincount(t["tile"], minlength=len(bufs))[rest]
+        idx = prop_index(t, distinct_prop)
+        code: dict = {}
+        vcode = np.array([code.setdefault(str(v), len(code))
+                          for v in t["values"]], np.int64)
+        has = idx >= 0
+        k = max(len(code), 1)
+        pairs = np.unique(t["tile"][has] * k + vcode[idx[has]])
+        nv[rest] = np.bincount(pairs // k, minlength=len(bufs))[rest]
+        rows = np.concatenate([np.flatnonzero(n), err])
+        arrays = _zxy(rb, rows) + [pa.array(n[rows]), pa.array(nv[rows])]
+        if quarantine:
+            arrays.append(pa.array([None] * (len(rows) - len(err)) + msgs,
+                                   pa.string()))
+        return pa.RecordBatch.from_arrays(arrays, schema=schema)
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..codec.decode import bulk_point_tile_stats
-        for pdf in batches:
-            # cross-tile fused fast path: one varint pass over the whole
-            # batch's conforming tiles (per-tile numpy setup amortized —
-            # the decode-side twin of the bulk encoder)
-            keep = [(int(z), int(x), int(y), bytes(buf))
-                    for z, x, y, buf in zip(pdf["z"], pdf["x"], pdf["y"],
-                                            pdf["tile_pbf"])
-                    if buf is not None]
-            if not keep:
-                continue
-            bufs = [r[3] for r in keep]
-            # The batch kernel wins where the per-tile walk's fixed numpy
-            # setup dominates — SPARSE tiles (few features). On dense tiles
-            # (KBs of features each) the walk is already amortized and the
-            # kernel's big streaming temporaries lose (the 4-vCPU bench VM's
-            # guest kernel inflates sustained streaming passes ~10x,
-            # BASELINE.md r3/r4). Route by tile size; chunk the sparse set by
-            # tiles AND bytes so the working set stays cache-resident.
-            ns = np.zeros(len(bufs), dtype=np.int64)
-            nvs = np.zeros(len(bufs), dtype=np.int64)
-            handled = np.zeros(len(bufs), dtype=bool)
-            small = [i for i, b in enumerate(bufs)
-                     if len(b) <= _BULK_DECODE_MAX_TILE]
-            lo = 0
-            while lo < len(small):
-                hi, acc = lo, 0
-                while hi < len(small) and hi - lo < _BULK_DECODE_CHUNK and \
-                        acc < _BULK_DECODE_BYTES:
-                    acc += len(bufs[small[hi]])
-                    hi += 1
-                sel = small[lo:hi]
-                # Any kernel exception degrades this chunk to the
-                # quarantined per-tile walk (handled stays False) — one
-                # corrupt tile must never fail the Spark task (ADVICE r4
-                # high: decode_tile_stats' per-tile isolation contract).
-                try:
-                    cns, cnvs, ch = bulk_point_tile_stats(
-                        [bufs[i] for i in sel], distinct_prop, layers)
-                except Exception:  # noqa: BLE001 — isolate chunk
-                    lo = hi
-                    continue
-                for k, i in enumerate(sel):
-                    ns[i], nvs[i], handled[i] = cns[k], cnvs[k], ch[k]
-                lo = hi
-            rows = []
-            for i, (z, x, y, buf) in enumerate(keep):
-                if handled[i]:
-                    if ns[i]:
-                        rows.append((z, x, y, int(ns[i]), int(nvs[i]), None)
-                                    if quarantine else
-                                    (z, x, y, int(ns[i]), int(nvs[i])))
-                    continue
-                if quarantine:
-                    try:
-                        n, nv = tile_counts(buf)
-                    except Exception as e:  # noqa: BLE001 — isolate tile
-                        rows.append((z, x, y, 0, 0, f"decode: {e!r}"[:200]))
-                        continue
-                    if n:
-                        rows.append((z, x, y, n, nv, None))
-                else:
-                    n, nv = tile_counts(buf)
-                    if n:
-                        rows.append((z, x, y, n, nv))
-            if rows:
-                cols = ["z", "x", "y", "n_features", out_col]
-                if quarantine:
-                    cols.append("error")
-                yield pd.DataFrame(rows, columns=cols)
-
-    schema = f"z int, x bigint, y bigint, n_features bigint, {out_col} bigint"
-    if quarantine:
-        schema += ", error string"
-    return tiles.mapInPandas(stats, schema)
+    return _decode_plan(tiles, schema, project)
 
 
 def decode_tile_point_agg(tiles: DataFrame, agg_fn, agg_schema: str,
@@ -579,62 +451,37 @@ def decode_tile_point_agg(tiles: DataFrame, agg_fn, agg_schema: str,
     can ride this without paying the one-row-per-feature Arrow return
     (the decode-return scaling bottleneck, BASELINE.md §scaling).
 
-    Coordinate semantics match decode_tiles(mode='int'): point layers via
-    the bulk decoder, other features contribute their first vertex, and
-    empty geometries contribute NaN (so counts include them, coordinate
-    predicates exclude them — same as the unfused groupBy plan).
+    Coordinate semantics match decode_tiles(mode='int'): the slices are
+    the feature table's first vertices, every feature contributing its
+    first vertex and empty geometries NaN (so counts include them,
+    coordinate predicates exclude them — same as the unfused groupBy plan).
 
     INPUT CONTRACT (same as decode_tile_stats): ONE row per (z, x, y)
     tile key. The aggregate runs per input ROW, not per key — feeding a
     key split across multiple rows yields duplicate (z, x, y) output
     rows, diverging from the unfused decode+groupBy plan. Composite
     partial-union tiles first (sparkops.compositing.composite)."""
+    import pyarrow as pa
+    schema = _ddl_schema(f"z int, x bigint, y bigint, {agg_schema}")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..codec.decode import bulk_point_layer, decode_feature, parse_tile
-        for pdf in batches:
-            rows = []
-            for z, x, y, buf in zip(pdf["z"], pdf["x"], pdf["y"],
-                                    pdf["tile_pbf"]):
-                if buf is None:
-                    continue
-                z, x, y = int(z), int(x), int(y)
-                xs_parts, ys_parts, ext_parts = [], [], []
-                for lf in parse_tile(bytes(buf)):
-                    if layers is not None and lf.name not in layers:
-                        continue
-                    bulk = bulk_point_layer(lf)
-                    if bulk is not None:
-                        # coords only: the dictionary-uniformity checks of
-                        # the props decoders don't apply here
-                        px, py = bulk[3], bulk[4]
-                        xs_parts.append(np.asarray(px, dtype=np.float64))
-                        ys_parts.append(np.asarray(py, dtype=np.float64))
-                        ext_parts.append(np.full(len(px), lf.extent,
-                                                 dtype=np.float64))
-                        continue
-                    for span in lf.feature_spans:
-                        f = decode_feature(lf, span, mode="int")
-                        if f is None:
-                            continue
-                        if len(f.xs):
-                            xs_parts.append(np.asarray(f.xs[:1], np.float64))
-                            ys_parts.append(np.asarray(f.ys[:1], np.float64))
-                        else:
-                            xs_parts.append(np.array([np.nan]))
-                            ys_parts.append(np.array([np.nan]))
-                        ext_parts.append(np.array([lf.extent], np.float64))
-                if not xs_parts:
-                    continue
-                rows.append((z, x, y, *agg_fn(
-                    z, x, y, np.concatenate(xs_parts),
-                    np.concatenate(ys_parts), np.concatenate(ext_parts))))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["z", "x", "y"] +
-                    [c.strip().split()[0] for c in agg_schema.split(",")])
+    def project(rb):
+        from ..codec.decode import first_vertex
+        t, _, _ = _decode_table(rb, "int", layers)
+        tile, start, count = np.unique(t["tile"], return_index=True,
+                                       return_counts=True)
+        fx, fy = first_vertex(t)
+        ext = t["extent"]
+        rows = [(z, x, y, *agg_fn(z, x, y, fx[s:s + c], fy[s:s + c],
+                                  ext[s:s + c]))
+                for z, x, y, s, c in zip(
+                    *(_col(rb, k)[tile].tolist() for k in ("z", "x", "y")),
+                    start.tolist(), count.tolist())]
+        if rows:
+            return pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type, from_pandas=True)
+                 for c, f in zip(zip(*rows), schema)], schema=schema)
 
-    return tiles.mapInPandas(run, f"z int, x bigint, y bigint, {agg_schema}")
+    return _decode_plan(tiles, schema, project)
 
 
 def encode_geobuf_tiles(entities: DataFrame,
@@ -874,7 +721,7 @@ def decode_tile_vertices(tiles: DataFrame, scale_dim: float | None = None) -> Da
     """Full-geometry decode to exploded vertex rows in tile-local integer
     coords — the LoadGeometry int path (read_feature_lazy.go:162-291).
 
-    mapInArrow over the columnar vertex kernel (decode.decode_vertex_rows):
+    The vertex-row projection (decode.vertex_rows) of the feature table:
     all tiles of an Arrow batch decode in one set of numpy passes, and the
     output batch is built straight from its arrays — ``layer`` and
     ``geojson_type`` by dictionary take, ``feature_id`` as int64 with a
@@ -885,7 +732,6 @@ def decode_tile_vertices(tiles: DataFrame, scale_dim: float | None = None) -> Da
     round-half-away-from-zero — ConvertGeometry / LoadGeometryScaled
     (read_feature_lazy.go:342-396, ``pbf.Round(x/dim, .5, 0)``)."""
     import pyarrow as pa
-    from pyspark.sql.pandas.types import from_arrow_schema
 
     fields = [("z", pa.int32()), ("x", pa.int64()), ("y", pa.int64()),
               ("layer", pa.string()), ("feature_id", pa.int64()),
@@ -893,97 +739,93 @@ def decode_tile_vertices(tiles: DataFrame, scale_dim: float | None = None) -> Da
               ("pt_idx", pa.int32()), ("ix", pa.int64()), ("iy", pa.int64())]
     if scale_dim is not None:
         fields += [("sx", pa.int64()), ("sy", pa.int64())]
-    out_schema = pa.schema(fields)
+    schema = pa.schema(fields)
 
-    def run(batches):
-        from ..codec.decode import (GEOJSON_TYPES, decode_vertex_rows,
-                                    round_half_away)
-        gj_names = pa.array(GEOJSON_TYPES, pa.string())
-        for rb in batches:
-            c = decode_vertex_rows(rb.column("tile_pbf").to_pylist())
-            t = c["tile"]
-            if not len(t):
-                continue
-            zs, xs, ys = (rb.column(k).to_numpy(zero_copy_only=False)[t]
-                          for k in ("z", "x", "y"))
-            arrays = [
-                pa.array(zs.astype(np.int32)), pa.array(xs.astype(np.int64)),
-                pa.array(ys.astype(np.int64)),
-                pa.array(c["layer_names"], pa.string()).take(c["layer"]),
-                pa.array(c["feature_id"], pa.int64(), mask=~c["fid_valid"]),
-                gj_names.take(c["geojson_type"]),
-                pa.array(c["ring_idx"]), pa.array(c["pt_idx"]),
-                pa.array(c["ix"]), pa.array(c["iy"])]
-            if scale_dim is not None:
-                arrays += [pa.array(round_half_away(c["ix"], scale_dim)),
-                           pa.array(round_half_away(c["iy"], scale_dim))]
-            yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
+    def project(rb):
+        from ..codec.decode import GEOJSON_TYPES, round_half_away, vertex_rows
+        c = vertex_rows(_decode_table(rb, "int", ids=True)[0])
+        arrays = _zxy(rb, c["tile"]) + [
+            pa.array(c["layer_names"], pa.string()).take(c["layer"]),
+            pa.array(c["feature_id"], pa.int64(), mask=~c["fid_valid"]),
+            pa.array(GEOJSON_TYPES, pa.string()).take(c["geojson_type"]),
+            pa.array(c["ring_idx"]), pa.array(c["pt_idx"]),
+            pa.array(c["ix"]), pa.array(c["iy"])]
+        if scale_dim is not None:
+            arrays += [pa.array(round_half_away(c["ix"], scale_dim)),
+                       pa.array(round_half_away(c["iy"], scale_dim))]
+        return pa.RecordBatch.from_arrays(arrays, schema=schema)
 
-    return tiles.select("z", "x", "y", "tile_pbf").mapInArrow(
-        run, from_arrow_schema(out_schema))
+    return _decode_plan(tiles, schema, project)
 
 
 def decode_tile_props_typed(tiles: DataFrame,
                             prop_schema: dict[str, str]) -> DataFrame:
     """Decode features to flat TYPED property columns — the 7-type MVT
     Value variant (write_primitives.go:202-243 / read_layer.go:97-114)
-    surviving the distributed round trip with python-native types.
+    surviving the distributed round trip with python-native types: a
+    typed gather from the feature table's value dictionary.
 
     ``prop_schema``: {prop_name: spark_type} e.g. {"nk": "bigint",
     "frac": "double", "flag": "boolean", "name": "string"}. Adds a
     ``ptypes`` column with the decoded python type names (sorted by prop)
     so tests/oracles can assert type preservation, not just values."""
-    from ..codec.decode import decode_feature, parse_tile
+    import pyarrow as pa
 
     names = sorted(prop_schema)
+    schema = _ddl_schema("feature_id bigint, ptypes string, " + ", ".join(
+        f"{c} {prop_schema[c]}" for c in names))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list] = {"feature_id": [], "ptypes": []}
-            for c in names:
-                cols[c] = []
-            for buf in pdf["tile_pbf"]:
-                if buf is None:
-                    continue
-                for lf in parse_tile(bytes(buf)):
-                    for span in lf.feature_spans:
-                        f = decode_feature(lf, span, mode="props")
-                        if f is None:
-                            continue
-                        cols["feature_id"].append(f.feature_id)
-                        tags = []
-                        for c in names:
-                            v = f.properties.get(c)
-                            cols[c].append(v)
-                            tags.append(type(v).__name__)
-                        cols["ptypes"].append(",".join(tags))
-            yield pd.DataFrame(cols)
+    def project(rb):
+        from ..codec.decode import prop_index
+        t, _, _ = _decode_table(rb, "props", ids=True)
+        vals = np.empty(len(t["values"]) + 1, object)  # [-1]: missing
+        vals[:-1] = t["values"]
+        tname = np.array([type(v).__name__ for v in vals], object)
+        idx = [prop_index(t, c) for c in names]
+        ptypes = tname[idx[0]]
+        for i in idx[1:]:
+            ptypes = ptypes + "," + tname[i]
+        fid = t["feature_id"]
+        return pa.RecordBatch.from_arrays(
+            [pa.array(fid, pa.int64(), mask=fid == 0),
+             pa.array(ptypes, pa.string())]
+            + [pa.array(vals[i].tolist(), f.type, from_pandas=True)
+               for i, f in zip(idx, list(schema)[2:])], schema=schema)
 
-    schema = "feature_id bigint, ptypes string, " + ", ".join(
-        f"{c} {prop_schema[c]}" for c in names)
-    return tiles.mapInPandas(run, schema)
+    return _decode_plan(tiles, schema, project)
 
 
 def tile_stats(tiles: DataFrame) -> DataFrame:
     """Header-only scan: layer names + feature counts without decoding
     features — the NewTile lazy-catalog path (read_tile.go:20-44). Null
-    tiles are skipped, as in every other decode entry point."""
-    from ..codec.decode import parse_tile
+    tiles are skipped and a tile that fails to parse raises with its
+    z/x/y, as in every other decode entry point."""
+    import pyarrow as pa
+    schema = pa.schema(
+        [("z", pa.int32()), ("x", pa.int64()), ("y", pa.int64()),
+         ("layer", pa.string())]
+        + [(c, pa.int32()) for c in ("n_features", "extent", "version",
+                                     "n_keys", "n_values")])
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for z, x, y, buf in zip(pdf["z"], pdf["x"], pdf["y"], pdf["tile_pbf"]):
-                if buf is None:
-                    continue
-                for lf in parse_tile(bytes(buf)):
-                    rows.append((int(z), int(x), int(y), lf.name,
-                                 len(lf.feature_spans), lf.extent, lf.version,
-                                 len(lf.keys), len(lf.values)))
-            yield pd.DataFrame(rows, columns=["z", "x", "y", "layer",
-                                              "n_features", "extent", "version",
-                                              "n_keys", "n_values"])
+    def project(rb):
+        from ..codec.decode import parse_tile
+        rows = []
+        for t, b in enumerate(rb.column("tile_pbf").to_pylist()):
+            if b is None:
+                continue
+            try:
+                frames = parse_tile(b)
+            except Exception as e:  # noqa: BLE001
+                _tile_error(rb, t, e, quarantine=False)   # raises
+            rows += [(t, lf.name, len(lf.feature_spans), lf.extent,
+                      lf.version, len(lf.keys), len(lf.values))
+                     for lf in frames]
+        if rows:
+            cols = list(zip(*rows))
+            return pa.RecordBatch.from_arrays(
+                _zxy(rb, np.array(cols[0], np.int64))
+                + [pa.array(c, f.type) for c, f in zip(cols[1:],
+                                                      list(schema)[3:])],
+                schema=schema)
 
-    return tiles.mapInPandas(
-        stats, "z int, x bigint, y bigint, layer string, n_features int, "
-               "extent int, version int, n_keys int, n_values int")
+    return _decode_plan(tiles, schema, project)
